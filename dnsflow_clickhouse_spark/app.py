@@ -22,6 +22,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dnsflow_clickhouse_spark import schemas as S
 from dnsflow_clickhouse_spark.io import write_report_idempotent
 from dnsflow_clickhouse_spark.operators.enrich import EnrichDims
 from dnsflow_clickhouse_spark.session import get_spark
@@ -29,32 +30,34 @@ from dnsflow_clickhouse_spark.sources.events import parse_raw_lines
 from dnsflow_clickhouse_spark.streaming.pipeline import (
     WINDOW_SECONDS,
     run_backfill,
-    run_batch_from_lines,
     start_stream,
+    write_window,
 )
 
-_DIM_FIELDS = [
-    "client_rules",
-    "media_rules",
-    "segment_rules",
-    "auth_domains",
-    "geo",
-    "whitelist",
-    "users",
-    "user_info",
-    "domain_tags",
-]
+# EnrichDims field -> the declared schema of its parquet table
+_DIM_FIELDS = {
+    "client_rules": S.CLIENT_RULE_SCHEMA,
+    "media_rules": S.MEDIA_RULE_SCHEMA,
+    "segment_rules": S.IP_SEGMENT_SCHEMA,
+    "auth_domains": S.AUTH_DOMAIN_SCHEMA,
+    "geo": S.GEO_SCHEMA,
+    "whitelist": S.WHITELIST_SCHEMA,
+    "users": S.USER_SCHEMA,
+    "user_info": S.USER_INFO_SCHEMA,
+    "domain_tags": S.DOMAIN_TAG_SCHEMA,
+}
 
 
 def load_dims(spark: SparkSession, dims_dir: str | None) -> EnrichDims:
     """Each EnrichDims field reads from ``<dims_dir>/<field>.parquet`` if
-    present; absent tables leave the field None (documented defaults)."""
+    present, with its declared schema, so no schema-inference job runs;
+    absent tables leave the field None (documented defaults)."""
     kwargs: dict[str, DataFrame] = {}
     if dims_dir:
-        for f in _DIM_FIELDS:
+        for f, schema in _DIM_FIELDS.items():
             p = os.path.join(dims_dir, f"{f}.parquet")
             if os.path.exists(p):
-                kwargs[f] = spark.read.parquet(p)
+                kwargs[f] = spark.read.schema(schema).parquet(p)
     return EnrichDims(**kwargs)
 
 
@@ -122,19 +125,9 @@ def main(argv: list[str] | None = None) -> None:
         }.items():
             sink(name, df, batch)
     else:  # batch: one window, same code path as a stream micro-batch
-        from dnsflow_clickhouse_spark.io import write_reports_concurrent
-
-        lines = spark.read.text(args.input)
-        reports = run_batch_from_lines(
-            lines, dims, args.app_time, deterministic=args.deterministic
-        )
-        # concurrent submission: sixteen small independent jobs over one
-        # cached base — a thread pool overlaps the per-job driver gaps
-        # (bench.py's fanout_overhead), which on a large cluster is the
-        # difference between the cluster working and idling between tiny
-        # stages. Writes are independent; results identical to the loop.
-        write_reports_concurrent(
-            reports, lambda name, df: sink(name, df, args.app_time)
+        events = parse_raw_lines(spark.read.text(args.input))
+        write_window(
+            events, dims, args.app_time, sink, deterministic=args.deterministic
         )
 
 

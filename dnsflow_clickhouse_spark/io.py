@@ -313,8 +313,8 @@ def write_reports_concurrent(
     max_threads: int = 8,
 ) -> list[str]:
     """Submit the report fan-out's sink jobs CONCURRENTLY from a driver
-    thread pool. The 16-report fan-out is sixteen small independent
-    jobs over one cached base frame; submitted sequentially, the wall
+    thread pool. The 18-report fan-out is eighteen small independent
+    jobs over a few cached shared frames; submitted sequentially, the wall
     is sum(job + driver gap) — on a 1000-executor cluster most of the
     cluster idles while the driver plans the next tiny job (bench.py's
     ``fanout_overhead`` line is exactly this cost, ~3.5s of the batch
@@ -322,7 +322,7 @@ def write_reports_concurrent(
     from multiple driver threads natively (FAIR or FIFO — each job's
     tasks interleave either way), so a thread pool overlaps the driver
     gaps and the small stages WITHOUT changing any result: the writes
-    are independent reads of one persisted frame.
+    are independent reads of persisted frames.
 
     ``write_one(name, df)`` performs one report's write (e.g. a
     ``write_report_idempotent`` closure). Exceptions propagate after

@@ -31,6 +31,7 @@ Scale design notes (100 TB):
 from __future__ import annotations
 
 import logging
+import time
 from collections.abc import Callable
 
 import pandas as pd
@@ -695,6 +696,10 @@ def lsh_candidate_pairs(
 # was HALF the catalog entry's 7.9 s; the algorithm itself runs ~2 s).
 _SCRATCH_RELEASE_MIN_BYTES = 256 << 20
 
+# the settle's sleep, a module attribute so a test can replace this one
+# call without patching time.sleep for every thread in the process
+_settle = time.sleep
+
 
 def _plan_input_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's optimized-plan size estimate for ``df`` (for a parquet
@@ -724,7 +729,6 @@ def _release_group_scratch(spark, input_bytes: int | None) -> None:
     no gateway: skip silently — cleanup then rides the session's normal
     GC cadence)."""
     import gc
-    import time as _time
 
     if input_bytes is not None and input_bytes < _SCRATCH_RELEASE_MIN_BYTES:
         return
@@ -733,7 +737,7 @@ def _release_group_scratch(spark, input_bytes: int | None) -> None:
         spark.sparkContext._jvm.System.gc()
     except Exception:
         return
-    _time.sleep(2.0)
+    _settle(2.0)
 
 
 # Measured single-node scratch model for the 64-hash production miner,

@@ -20,7 +20,7 @@ joins exactly once per dim and never shuffles — all joins broadcast.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -28,7 +28,6 @@ from pyspark.sql import functions as F
 from dnsflow_clickhouse_spark.functions.domains import authority_domain, strip_scheme
 from dnsflow_clickhouse_spark.functions.net import ip_to_long
 from dnsflow_clickhouse_spark.operators.range_join import (
-    collect_bounds,
     membership_flag,
     range_join,
 )
@@ -53,6 +52,28 @@ class EnrichDims:
     users: DataFrame | None = None  # USER_SCHEMA (ip -> userName)
     user_info: DataFrame | None = None  # USER_INFO_SCHEMA (phone/address)
     domain_tags: DataFrame | None = None  # DOMAIN_TAG_SCHEMA
+    _rows: dict[str, list[dict]] = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
+
+    def rows(self, name: str) -> list[dict]:
+        """Rows of the dim table ``name``, collected to the driver at
+        most once per instance: the range lookups of every report built
+        from these dims share one collect job per table."""
+        if name not in self._rows:
+            self._rows[name] = [r.asDict() for r in getattr(self, name).collect()]
+        return self._rows[name]
+
+
+def in_net_bounds(dims: EnrichDims) -> list[tuple[int, int]]:
+    """J3's [lo, hi] ranges: media and segment rules together, because
+    inNet is membership in either (DnsRptCH.scala:222-235)."""
+    return [
+        (r["min_long_ip"], r["max_long_ip"])
+        for name in ("media_rules", "segment_rules")
+        if getattr(dims, name) is not None
+        for r in dims.rows(name)
+    ]
 
 
 def enrich_base(events: DataFrame, dims: EnrichDims) -> DataFrame:
@@ -70,6 +91,7 @@ def enrich_base(events: DataFrame, dims: EnrichDims) -> DataFrame:
             df,
             dims.client_rules,
             "clientIpLong",
+            rule_rows=dims.rows("client_rules"),
             match="first",
             payload_cols=["client_type_id"],
             defaults={"client_type_id": DEFAULT_CLIENT_NAME},
@@ -81,6 +103,7 @@ def enrich_base(events: DataFrame, dims: EnrichDims) -> DataFrame:
             df,
             dims.geo,
             "aipLong",
+            rule_rows=dims.rows("geo"),
             match="first",
             payload_cols=["country", "province", "city", "operator"],
             defaults={
@@ -126,11 +149,7 @@ def enrich_top(top: DataFrame, dims: EnrichDims) -> DataFrame:
 
     # J3 inNet: membership OR over media + segment ranges -> inNet =
     # resolver when inside, else 0 (DnsRptCH.scala:222-235)
-    bounds: list[tuple[int, int]] = []
-    if dims.media_rules is not None:
-        bounds += collect_bounds(dims.media_rules)
-    if dims.segment_rules is not None:
-        bounds += collect_bounds(dims.segment_rules)
+    bounds = in_net_bounds(dims)
     if bounds:
         # size-routed: literal OR below ~100 merged ranges, broadcast
         # interval join above (see membership_flag docstring)
@@ -156,6 +175,7 @@ def enrich_top(top: DataFrame, dims: EnrichDims) -> DataFrame:
             df,
             dims.geo,
             "aipLong",
+            rule_rows=dims.rows("geo"),
             match="first",
             payload_cols=["country", "province", "city", "operator"],
             defaults={"country": "", "province": "", "city": "", "operator": ""},
@@ -218,6 +238,7 @@ def enrich_business(top: DataFrame, dims: EnrichDims) -> DataFrame:
         df,
         dims.segment_rules,
         "aipLong",
+        rule_rows=dims.rows("segment_rules"),
         match="last",
         order_col="rule_idx",
         payload_cols=["resource_name", "resource_type", "resource_props"],

@@ -86,6 +86,7 @@ def range_join(
     payload_cols: list[str] | None = None,
     defaults: dict[str, object] | None = None,
     assume_disjoint: bool = False,
+    rule_rows: list[dict] | None = None,
 ) -> DataFrame:
     """Left range join on ``lo <= probe <= hi`` (inclusive bounds, as in
     reference DnsRptCH.scala:929), attaching one rule's payload per fact
@@ -94,12 +95,15 @@ def range_join(
     The rule table is collected to the driver (it is a broadcast dim by
     definition — the reference does the same), flattened to disjoint
     intervals, and re-broadcast. The fact side incurs no shuffle.
+    ``rule_rows`` passes rows already collected from ``rules`` (as
+    dicts), so a caller holding them pays no collect job.
     """
     if payload_cols is None:
         payload_cols = [
             c for c in rules.columns if c not in (lo_col, hi_col, order_col)
         ]
-    rule_rows = [r.asDict() for r in rules.collect()]
+    if rule_rows is None:
+        rule_rows = [r.asDict() for r in rules.collect()]
     if assume_disjoint:
         flat = [
             {"lo": r[lo_col], "hi": r[hi_col], "payload": {k: r[k] for k in payload_cols}}
@@ -205,12 +209,6 @@ def membership_flag(
         .withColumn(flag_col, F.col("__mlo").isNotNull())
         .drop("__mlo", "__mhi")
     )
-
-
-def collect_bounds(
-    rules: DataFrame, lo_col: str = "min_long_ip", hi_col: str = "max_long_ip"
-) -> list[tuple[int, int]]:
-    return [(r[lo_col], r[hi_col]) for r in rules.select(lo_col, hi_col).collect()]
 
 
 def prefix_bucketed_range_join(

@@ -5,9 +5,12 @@ Shared conventions (reference semantics preserved):
 - ``resolver`` sums are row counts (resolver == 1 per event,
   BeanObj.scala:18); ``error`` sums count failed resolutions.
 - ``clientName == 0`` is the "all clients" sentinel row set — produced
-  here with ``rollup('clientName')`` + coalesce-to-0 instead of running
-  each aggregation twice (reference runs a global and a per-client
+  here with GROUPING SETS + coalesce-to-0 instead of running each
+  aggregation twice (reference runs a global and a per-client
   reduceByKey separately, e.g. DnsRptCH.scala:522-552).
+- Reports that aggregate the same input are projections of one shared
+  frame (``rollup_aggregate``, ``code_topk_frame``), which the pipeline
+  persists once per window: one scan and one exchange feed many reports.
 - Every reference ``groupByKey+sort+take`` becomes a window row_number
   (grouped_topk); every ``sortBy+take`` becomes orderBy().limit()
   (TakeOrderedAndProject). Manual 100-way salting (DnsRptCH.scala:641
@@ -25,86 +28,102 @@ from dnsflow_clickhouse_spark.functions.domains import authority_domain
 from dnsflow_clickhouse_spark.operators.enrich import (
     EnrichDims,
     enrich_business,
+    in_net_bounds,
     join_users,
 )
 from dnsflow_clickhouse_spark.operators.topk import global_topk, grouped_topk
 
 ALL_CLIENTS = 0  # sentinel (DnsRptCH.scala:453, 478, 503, 532)
+CLIENT = "clientName"
 
 
-def _rollup_clients(df: DataFrame, keys: list[str], aggs: list) -> DataFrame:
-    """Aggregate by (clientName, *keys) at both per-client and all-client
-    granularity in ONE shuffle pass via GROUPING SETS; the all-clients
-    rows surface with the reference's clientName=0 sentinel. (The
-    reference runs two separate reduceByKey jobs per report instead.)"""
-    out = (
-        df.groupingSets([["clientName", *keys], [*keys]], "clientName", *keys)
-        .agg(*aggs)
-        .withColumn("clientName", F.coalesce(F.col("clientName"), F.lit(ALL_CLIENTS)))
+def _grouping_id(cols: list[str], grouped: list[str]) -> int:
+    """Spark's ``grouping_id()`` of the grouping set ``grouped`` in an
+    aggregate over ``cols``: one bit per column, first column highest,
+    set where the column is aggregated away."""
+    return sum(1 << (len(cols) - 1 - i) for i, c in enumerate(cols) if c not in grouped)
+
+
+# --- A1-A5, A17-A19: the roll-up reports over base, as one spec
+#     (DnsRptCH.scala:446-552, 608-625, 747-791; salting dropped) ---
+
+# report -> (key column, or None for the per-client totals; measures).
+# Every report holds a per-client row and a clientName=0 all-clients row
+# per key value; rows whose key is null are dropped.
+ROLLUPS: dict[str, tuple[str | None, tuple[str, ...]]] = {
+    "dns_flow_qps": (None, ("dnsNum", "errNum", "avgNum")),  # A1/A2
+    "dns_flow_request_type": ("requestType", ("dnsNum",)),  # A3
+    "dns_flow_response_type": ("responseType", ("dnsNum",)),  # A4
+    "dns_flow_response_code": ("responseCode", ("dnsNum",)),  # A5
+    "dns_flow_top_server": ("dnsIp", ("dnsNum",)),  # A17
+    "dns_flow_top_province": ("province", ("dnsNum",)),  # A18
+    "dns_flow_top_operator": ("operator", ("dnsNum",)),  # A19
+}
+_ROLLUP_KEYS = [k for k, _ in ROLLUPS.values() if k is not None]
+_ROLLUP_COLS = [CLIENT, *_ROLLUP_KEYS]
+
+
+def rollup_aggregate(base: DataFrame) -> DataFrame:
+    """Every ``ROLLUPS`` report's rows in one GROUPING SETS aggregate —
+    one scan of base and one exchange instead of one job chain per
+    report. The sets are (clientName), () and, per key k, (clientName, k)
+    and (k); ``gid`` (``grouping_id()``) tells them apart, so a key's
+    rows never mix with another set's nulls."""
+    sets = [[CLIENT], []]
+    for k in _ROLLUP_KEYS:
+        sets += [[CLIENT, k], [k]]
+    return base.groupingSets(sets, *_ROLLUP_COLS).agg(
+        F.sum("resolver").alias("dnsNum"),
+        F.sum("error").alias("errNum"),
+        F.grouping_id().alias("gid"),
     )
-    return out
 
 
-# --- A1/A2: QPS (reference getDnsQps, DnsRptCH.scala:522-552) ---
+def rollup_report(shared: DataFrame, name: str, window_seconds: int = 300) -> DataFrame:
+    """Report ``name`` of ``ROLLUPS``: its two grouping sets of the
+    ``rollup_aggregate`` frame, projected to (clientName, key, measures)."""
+    key, measures = ROLLUPS[name]
+    keys = [] if key is None else [key]
+    gids = [_grouping_id(_ROLLUP_COLS, [CLIENT, *keys]), _grouping_id(_ROLLUP_COLS, keys)]
+    m = {  # avgNum: the window's mean queries per second
+        "dnsNum": F.col("dnsNum"),
+        "errNum": F.col("errNum"),
+        "avgNum": F.floor(F.col("dnsNum") / window_seconds).cast("long").alias("avgNum"),
+    }
+    out = shared.filter(F.col("gid").isin(gids)).select(
+        F.coalesce(F.col(CLIENT), F.lit(ALL_CLIENTS)).alias(CLIENT),
+        *keys,
+        *[m[c] for c in measures],
+    )
+    return out if key is None else out.filter(F.col(key).isNotNull())
 
 
-def qps_report(base: DataFrame, window_seconds: int = 300) -> DataFrame:
-    """count + error count + avgNum = floor(count/window) — global row
-    (clientName=0) plus one row per client, in one rollup pass."""
-    return _rollup_clients(
-        base,
-        [],
-        [
-            F.sum("resolver").alias("dnsNum"),
-            F.sum("error").alias("errNum"),
-        ],
-    ).withColumn("avgNum", F.floor(F.col("dnsNum") / window_seconds).cast("long"))
+# --- A6-A9: top-K pairs per response code (DnsRptCH.scala:633-741).
+#     Each pair (all clients, per client) is ranked in one frame: the
+#     grouping sets (clientName, responseCode, x) and (responseCode, x)
+#     aggregated together and ranked per (gid, clientName, responseCode).
+#     gid is 0 on per-client rows and 4 on all-clients rows. ---
+
+_PER_CLIENT_GID = 0
 
 
-# --- A3: request-type ratio (DnsRptCH.scala:774-791) ---
+def code_topk_frame(base: DataFrame, item: str, k: int) -> DataFrame:
+    """Top-``k`` ``item`` values by row count per response code, for all
+    clients and per client (A6/A8 on ``domain``, A9 on ``clientIp``)."""
+    keys = [CLIENT, "responseCode", item]
+    agg = base.groupingSets([keys, keys[1:]], *keys).agg(
+        F.sum("resolver").alias("dnsNum"), F.grouping_id().alias("gid")
+    )
+    return grouped_topk(
+        agg, ["gid", CLIENT, "responseCode"], [F.desc("dnsNum"), F.asc(item)], k
+    )
 
 
-def request_type_ratio(base: DataFrame) -> DataFrame:
-    return _rollup_clients(
-        base, ["requestType"], [F.sum("resolver").alias("dnsNum")]
-    ).filter(F.col("requestType").isNotNull())
-
-
-# --- A4: response-type ratio (DnsRptCH.scala:747-768; salting dropped) ---
-
-
-def response_type_ratio(base: DataFrame) -> DataFrame:
-    return _rollup_clients(
-        base, ["responseType"], [F.sum("resolver").alias("dnsNum")]
-    ).filter(F.col("responseType").isNotNull())
-
-
-# --- A5: response-code ratio (DnsRptCH.scala:608-625) ---
-
-
-def response_code_ratio(base: DataFrame) -> DataFrame:
-    return _rollup_clients(
-        base, ["responseCode"], [F.sum("resolver").alias("dnsNum")]
-    ).filter(F.col("responseCode").isNotNull())
-
-
-# --- A6/A8: top domains per response code (DnsRptCH.scala:633-653, 672-697) ---
-
-
-def response_code_domain_topk(base: DataFrame, k: int = 5000, per_client: bool = False) -> DataFrame:
-    keys = ["clientName", "responseCode"] if per_client else ["responseCode"]
-    agg = base.groupBy(*keys, "domain").agg(F.sum("resolver").alias("dnsNum"))
-    return grouped_topk(agg, keys, [F.desc("dnsNum"), F.asc("domain")], k)
-
-
-# --- A7: authority-domain rollup OF the top-K output (order of operations
-#     preserved: rollup-of-topK, not topK-of-rollup; DnsRptCH.scala:656-667) ---
-
-
-def response_code_authority_topk(
-    domain_topk: DataFrame, k: int = 5000, per_client: bool = False
-) -> DataFrame:
-    keys = ["clientName", "responseCode"] if per_client else ["responseCode"]
+def authority_topk_frame(domain_topk: DataFrame, k: int = 5000) -> DataFrame:
+    """A7: authority-domain rollup OF the ranked domain frame (order of
+    operations preserved: rollup-of-topK, not topK-of-rollup;
+    DnsRptCH.scala:656-667), both granularities at once."""
+    keys = ["gid", CLIENT, "responseCode"]
     rolled = (
         domain_topk.withColumn("authorityDomain", authority_domain("domain"))
         .groupBy(*keys, "authorityDomain")
@@ -113,13 +132,13 @@ def response_code_authority_topk(
     return grouped_topk(rolled, keys, [F.desc("dnsNum"), F.asc("authorityDomain")], k)
 
 
-# --- A9: top client IPs per response code (DnsRptCH.scala:707-741) ---
-
-
-def response_code_client_topk(base: DataFrame, k: int = 500, per_client: bool = False) -> DataFrame:
-    keys = ["clientName", "responseCode"] if per_client else ["responseCode"]
-    agg = base.groupBy(*keys, "clientIp").agg(F.sum("resolver").alias("dnsNum"))
-    return grouped_topk(agg, keys, [F.desc("dnsNum"), F.asc("clientIp")], k)
+def split_clients(ranked: DataFrame, item: str) -> tuple[DataFrame, DataFrame]:
+    """(all-clients report, per-client report) of a ranked pair frame."""
+    per_client = F.col("gid") == _PER_CLIENT_GID
+    return (
+        ranked.filter(~per_client).select("responseCode", item, "dnsNum"),
+        ranked.filter(per_client).select(CLIENT, "responseCode", item, "dnsNum"),
+    )
 
 
 # --- A10: 4-dim flow report with whitelist boost (DnsRptCH.scala:558-602) ---
@@ -235,40 +254,18 @@ def detail_report(enriched_top: DataFrame, having_min: int = 100) -> DataFrame:
 
 
 def business_report(flow: DataFrame) -> DataFrame:
-    """Rollup by resource; output resourceType = type + "/" + props
-    (reference :428, 437)."""
-    df = flow.filter(F.col("resource_name").isNotNull())
-    return _rollup_clients(
-        df,
-        ["resource_name", "resource_type", "resource_props"],
-        [F.sum("resolver").alias("dnsNum")],
+    """Rollup by resource, per client and for all clients (clientName=0);
+    output resourceType = type + "/" + props (reference :428, 437)."""
+    keys = ["resource_name", "resource_type", "resource_props"]
+    return (
+        flow.filter(F.col("resource_name").isNotNull())
+        .groupingSets([[CLIENT, *keys], keys], CLIENT, *keys)
+        .agg(F.sum("resolver").alias("dnsNum"))
     ).select(
-        "clientName",
+        F.coalesce(F.col(CLIENT), F.lit(ALL_CLIENTS)).alias(CLIENT),
         F.col("resource_name").alias("resourceName"),
         F.concat_ws("/", "resource_type", "resource_props").alias("resourceType"),
         "dnsNum",
-    )
-
-
-# --- A17/A18/A19: dns-server / province / operator counts
-#     (DnsRptCH.scala:446-516) ---
-
-
-def dns_server_topn(base: DataFrame) -> DataFrame:
-    return _rollup_clients(base, ["dnsIp"], [F.sum("resolver").alias("dnsNum")]).filter(
-        F.col("dnsIp").isNotNull()
-    )
-
-
-def province_report(base: DataFrame) -> DataFrame:
-    return _rollup_clients(base, ["province"], [F.sum("resolver").alias("dnsNum")]).filter(
-        F.col("province").isNotNull()
-    )
-
-
-def operator_report(base: DataFrame) -> DataFrame:
-    return _rollup_clients(base, ["operator"], [F.sum("resolver").alias("dnsNum")]).filter(
-        F.col("operator").isNotNull()
     )
 
 
@@ -302,13 +299,9 @@ def user_report(
         named, [F.desc("error"), F.asc("clientIp"), F.asc("domain"), F.asc("aip")], k2
     )
     from dnsflow_clickhouse_spark.functions.net import ip_to_long
-    from dnsflow_clickhouse_spark.operators.range_join import collect_bounds, in_any_range
+    from dnsflow_clickhouse_spark.operators.range_join import in_any_range
 
-    bounds: list[tuple[int, int]] = []
-    if dims.media_rules is not None:
-        bounds += collect_bounds(dims.media_rules)
-    if dims.segment_rules is not None:
-        bounds += collect_bounds(dims.segment_rules)
+    bounds = in_net_bounds(dims)
     top2 = top2.withColumn("aipLong", ip_to_long("aip")).withColumn(
         "inNet",
         F.when(

@@ -11,6 +11,9 @@ is chosen to survive a large multi-executor cluster:
   TIMESTAMP(NANOS), which vanilla Spark refuses; we read it as a long
   and convert (see sources.tables).
 - UTC session timezone so epoch math agrees with external oracles.
+- AQE may re-partition cached plans: a small persisted aggregate is
+  coalesced like any other query's output, so a report projected from
+  it writes one file instead of one per shuffle partition.
 """
 
 from __future__ import annotations
@@ -43,6 +46,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

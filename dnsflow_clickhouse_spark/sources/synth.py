@@ -1,6 +1,6 @@
 """Synthetic DNS batch input: a RAW_EVENT_SCHEMA frame plus demo
 dimension tables derived DETERMINISTICALLY from the generic ``events``
-table, so the end-to-end 16-report window batch
+table, so the end-to-end 18-report window batch
 (:func:`dnsflow_clickhouse_spark.streaming.pipeline.process_batch`,
 mirroring the reference's per-window fan-out, DnsRptCH.scala:1069-1139)
 can be driven — and benchmarked — at any scale factor without shipping

@@ -14,8 +14,9 @@ Reference behavior being re-expressed:
 - state: none — every batch is independent; the fan-out is stateless
   over the batch's events, so ``foreachBatch`` is the right tool (no
   stateful operators needed).
-- caching: base and top frames persist(MEMORY_AND_DISK) around the
-  16-report fan-out, unpersisted in finally (DnsRptCH.scala:1069-1160).
+- caching: the base, flow and top frames and the shared report
+  aggregates persist(MEMORY_AND_DISK) around the 18-report fan-out;
+  ``write_window`` unpersists them in finally (DnsRptCH.scala:1069-1160).
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from dnsflow_clickhouse_spark.io import write_reports_concurrent
 from dnsflow_clickhouse_spark.operators import reports as R
 from dnsflow_clickhouse_spark.operators.enrich import (
     EnrichDims,
@@ -45,6 +47,7 @@ def process_batch(
     app_time_s: int | None = ...,
     deterministic: bool = ...,
     return_base: Literal[False] = ...,
+    persisted: list[DataFrame] | None = ...,
 ) -> dict[str, DataFrame]: ...
 
 
@@ -56,6 +59,7 @@ def process_batch(
     deterministic: bool = ...,
     *,
     return_base: Literal[True],
+    persisted: list[DataFrame] | None = ...,
 ) -> tuple[dict[str, DataFrame], DataFrame]: ...
 
 
@@ -65,6 +69,7 @@ def process_batch(
     app_time_s: int | None = None,
     deterministic: bool = False,
     return_base: bool = False,
+    persisted: list[DataFrame] | None = None,
 ) -> dict[str, DataFrame] | tuple[dict[str, DataFrame], DataFrame]:
     """Run the full report fan-out over one window's events.
 
@@ -72,14 +77,25 @@ def process_batch(
     filtering to ``[app_time_s, app_time_s + 300)`` happens here exactly
     like the reference's per-record window filter (DnsRptCH.scala:888).
 
-    Returns {report_name: DataFrame}; the caller persists/writes. All 16
-    reports read the cached base/top frames — one scan + one parse
-    amortized across the fan-out. ``return_base=True`` returns
+    Returns {report_name: DataFrame}; the caller writes. The 18 reports
+    are projections of a few persisted frames — base, flow, top, the
+    roll-up aggregate and the three ranked top-K pair frames — so one
+    scan + one parse is amortized across the fan-out, and each shared
+    aggregate runs once. Every frame persisted here is appended to
+    ``persisted`` when given, for the caller to unpersist once the
+    reports are written (``write_window``). ``return_base=True`` returns
     ``(reports, base)`` instead, so a harness can materialize the shared
     cached base on its own clock and report the scan+parse+enrich cost
     separately from the per-report costs (bench.py's
     ``base_materialize`` line) — production callers ignore it.
     """
+
+    def keep(df: DataFrame) -> DataFrame:
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        if persisted is not None:
+            persisted.append(df)
+        return df
+
     window_end = app_time_s + WINDOW_SECONDS if app_time_s is not None else None
     derived = derive_events(
         events,
@@ -87,41 +103,68 @@ def process_batch(
         window_end_s=window_end,
         deterministic_aip=deterministic,
     )
-    base = enrich_base(derived, dims).persist(StorageLevel.MEMORY_AND_DISK)
+    base = keep(enrich_base(derived, dims))
+    flow = keep(R.flow_report(base, dims))
+    top = keep(enrich_top(flow, dims))
+    rollups = keep(R.rollup_aggregate(base))
+    domains = keep(R.code_topk_frame(base, "domain", 5000))
+    authorities = keep(R.authority_topk_frame(domains))
+    client_ips = keep(R.code_topk_frame(base, "clientIp", 500))
 
-    flow = R.flow_report(base, dims).persist(StorageLevel.MEMORY_AND_DISK)
-    top = enrich_top(flow, dims)
+    code_domain, code_domain_client = R.split_clients(domains, "domain")
+    code_authority, code_authority_client = R.split_clients(authorities, "authorityDomain")
+    code_client_ip, code_client_ip_client = R.split_clients(client_ips, "clientIp")
 
-    code_domain = R.response_code_domain_topk(base)
-    code_domain_client = R.response_code_domain_topk(base, per_client=True)
+    def rollup(name: str) -> DataFrame:
+        return R.rollup_report(rollups, name, WINDOW_SECONDS)
 
     out: dict[str, DataFrame] = {
-        "dns_flow_qps": R.qps_report(base),
-        "dns_flow_request_type": R.request_type_ratio(base),
-        "dns_flow_response_type": R.response_type_ratio(base),
-        "dns_flow_response_code": R.response_code_ratio(base),
+        "dns_flow_qps": rollup("dns_flow_qps"),
+        "dns_flow_request_type": rollup("dns_flow_request_type"),
+        "dns_flow_response_type": rollup("dns_flow_response_type"),
+        "dns_flow_response_code": rollup("dns_flow_response_code"),
         "dns_flow_code_domain": code_domain,
-        "dns_flow_code_authority": R.response_code_authority_topk(code_domain),
+        "dns_flow_code_authority": code_authority,
         "dns_flow_code_domain_client": code_domain_client,
-        "dns_flow_code_authority_client": R.response_code_authority_topk(
-            code_domain_client, per_client=True
-        ),
-        "dns_flow_code_client_ip": R.response_code_client_topk(base),
-        "dns_flow_code_client_ip_client": R.response_code_client_topk(
-            base, per_client=True
-        ),
+        "dns_flow_code_authority_client": code_authority_client,
+        "dns_flow_code_client_ip": code_client_ip,
+        "dns_flow_code_client_ip_client": code_client_ip_client,
         "dns_flow_clear": top,
         "dns_flow_trend": R.detail_report(top),
         "dns_flow_top_business": R.business_report(flow),
-        "dns_flow_top_server": R.dns_server_topn(base),
-        "dns_flow_top_province": R.province_report(base),
-        "dns_flow_top_operator": R.operator_report(base),
+        "dns_flow_top_server": rollup("dns_flow_top_server"),
+        "dns_flow_top_province": rollup("dns_flow_top_province"),
+        "dns_flow_top_operator": rollup("dns_flow_top_operator"),
         "bigdata_dns_flow_top_user": R.user_report(base, dims),
         "dns_middle_user": R.user_middle_data(base, dims),
     }
     if return_base:
         return out, base
     return out
+
+
+def write_window(
+    events: DataFrame,
+    dims: EnrichDims,
+    app_time_s: int,
+    sink: Callable[[str, DataFrame, int], None],
+    deterministic: bool = False,
+) -> None:
+    """Build window ``app_time_s`` with ``process_batch`` and write its
+    18 reports through ``sink(name, df, app_time_s)``, submitted
+    concurrently (``io.write_reports_concurrent``). Every frame the
+    window persisted is unpersisted in finally, also when a write fails;
+    the list is this call's own, so concurrent windows never release
+    each other's frames."""
+    persisted: list[DataFrame] = []
+    try:
+        reports = process_batch(
+            events, dims, app_time_s, deterministic=deterministic, persisted=persisted
+        )
+        write_reports_concurrent(reports, lambda name, df: sink(name, df, app_time_s))
+    finally:
+        for df in persisted:
+            df.unpersist(blocking=True)
 
 
 def run_batch_from_lines(
@@ -149,8 +192,7 @@ def run_backfill(
     the reference's offline loop (DnsRptOffline.scala:69-73). One code
     path with streaming; only the driver loop differs."""
     for t in range(start_s, end_s, WINDOW_SECONDS):
-        for name, df in process_batch(events, dims, t, deterministic=deterministic).items():
-            sink(name, df, t)
+        write_window(events, dims, t, sink, deterministic=deterministic)
 
 
 def windowed_qps_stream(
@@ -291,7 +333,7 @@ def start_stream(
     deterministic: bool = False,
 ):
     """File-source Structured Stream: new JSON-line files are discovered
-    per trigger; each micro-batch runs the same ``process_batch`` via
+    per trigger; each micro-batch runs the same ``write_window`` via
     foreachBatch. Watermarking is implicit in the window filter (each
     batch processes the window that closed >= 5 min ago, exactly the
     reference's late-data allowance); checkpointing gives restart-safety
@@ -315,8 +357,7 @@ def start_stream(
         if bounds["m"] is None:
             return
         app_time = (int(bounds["m"]) // WINDOW_SECONDS - 1) * WINDOW_SECONDS
-        for name, df in process_batch(parsed, dims, app_time, deterministic=deterministic).items():
-            sink(name, df, app_time)
+        write_window(parsed, dims, app_time, sink, deterministic=deterministic)
 
     return (
         raw.writeStream.foreachBatch(handle)

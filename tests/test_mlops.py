@@ -1333,12 +1333,10 @@ def test_choose_n_band_groups_model():
 def test_release_group_scratch_size_gate(spark, monkeypatch):
     """Small inputs must skip the GC nudge + settle entirely; unknown
     (None) sizes are treated as large and keep it."""
-    import time as _time_mod
-
     from dnsflow_clickhouse_spark.operators import dedup as dd
 
     slept: list[float] = []
-    monkeypatch.setattr(_time_mod, "sleep", lambda s: slept.append(s))
+    monkeypatch.setattr(dd, "_settle", lambda s: slept.append(s))
     dd._release_group_scratch(spark, 1 << 20)  # 1 MB: gated out
     assert slept == []
     dd._release_group_scratch(spark, None)  # unknown: conservative

@@ -52,7 +52,7 @@ def test_base_derivation_matches_python_oracle(spark, base_df):
 
 
 def test_qps_report_invariants(spark, base_df):
-    qps = R.qps_report(base_df).collect()
+    qps = R.rollup_report(R.rollup_aggregate(base_df), "dns_flow_qps").collect()
     exp = FX.py_base_events()
     rows = {r["clientName"]: r for r in qps}
     # clientName=0 sentinel row equals totals (A1 = Σ A2, SURVEY §5.4)
@@ -65,7 +65,7 @@ def test_qps_report_invariants(spark, base_df):
 
 
 def test_response_code_totals(spark, base_df):
-    out = R.response_code_ratio(base_df).collect()
+    out = R.rollup_report(R.rollup_aggregate(base_df), "dns_flow_response_code").collect()
     exp = Counter((0, e["responseCode"]) for e in FX.py_base_events())
     exp += Counter((e["clientName"], e["responseCode"]) for e in FX.py_base_events())
     got = {(r["clientName"], r["responseCode"]): r["dnsNum"] for r in out}
