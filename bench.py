@@ -136,7 +136,7 @@ def _dns_batch(spark, sf_dir: str) -> tuple[float, dict[str, float], float]:
 
 
 def _dns_batch_concurrent(spark, sf_dir: str) -> float:
-    """The same production batch with the 16 sink jobs submitted from a
+    """The same production batch with the 18 sink jobs submitted from a
     driver thread pool (io.write_reports_concurrent, what app.py batch
     mode runs): overlapping the per-job driver gaps recovers most of
     ``fanout_overhead`` — measured 14.2s -> 10.2s warm at sf0.1. Timed

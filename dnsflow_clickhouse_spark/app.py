@@ -9,10 +9,11 @@ conf/config.properties), as one CLI:
 
 Configuration is explicit flags (the reference's properties file mapped
 1:1 where still meaningful); dimensions load from a directory of parquet
-tables named after the EnrichDims fields (any missing table → that
-enrichment degrades to its documented default, same as an empty dim in
-the reference). Reports land as parquet under --out, one table per
-report, written through the retry-safe batch-id sink.
+tables named after the EnrichDims fields. A missing table (every table,
+without --dims) loads as an empty one, so that enrichment takes its
+documented default, same as an empty dim in the reference. Reports land
+as parquet under --out, one table per report, written through the
+retry-safe batch-id sink.
 """
 
 from __future__ import annotations
@@ -49,16 +50,18 @@ _DIM_FIELDS = {
 
 
 def load_dims(spark: SparkSession, dims_dir: str | None) -> EnrichDims:
-    """Each EnrichDims field reads from ``<dims_dir>/<field>.parquet`` if
-    present, with its declared schema, so no schema-inference job runs;
-    absent tables leave the field None (documented defaults)."""
-    kwargs: dict[str, DataFrame] = {}
-    if dims_dir:
-        for f, schema in _DIM_FIELDS.items():
-            p = os.path.join(dims_dir, f"{f}.parquet")
-            if os.path.exists(p):
-                kwargs[f] = spark.read.schema(schema).parquet(p)
-    return EnrichDims(**kwargs)
+    """Each EnrichDims field reads ``<dims_dir>/<field>.parquet`` with its
+    declared schema, so no schema-inference job runs. An absent table, or
+    every table when ``dims_dir`` is None, is an empty frame of that
+    schema: absent = empty, and its join yields the documented defaults."""
+
+    def load(f: str, schema) -> DataFrame:
+        p = os.path.join(dims_dir, f"{f}.parquet") if dims_dir else None
+        if p and os.path.exists(p):
+            return spark.read.schema(schema).parquet(p)
+        return spark.createDataFrame([], schema)
+
+    return EnrichDims(**{f: load(f, schema) for f, schema in _DIM_FIELDS.items()})
 
 
 def _sink(out_dir: str):

@@ -16,6 +16,10 @@ Reference mechanics being re-expressed:
 Every dimension is resolved to at most one payload per probe *on the
 rule side* (interval flattening / last-wins dedup), so the fact table
 joins exactly once per dim and never shuffles — all joins broadcast.
+
+Each join has one code path: a missing dimension is an empty table of
+its declared schema (``app.load_dims``), which yields the documented
+defaults exactly as an empty lookup map does in the reference.
 """
 
 from __future__ import annotations
@@ -39,19 +43,20 @@ DEFAULT_CLIENT_NAME = 5
 class EnrichDims:
     """All dimension DataFrames used by the pipeline (fixture-injectable).
 
-    Schemas in dnsflow_clickhouse_spark.schemas. Every frame is small —
+    Schemas in dnsflow_clickhouse_spark.schemas. Every field is required;
+    a table with no rows stands for a missing one. Every frame is small —
     the reference collects them to the driver; we broadcast-join them.
     """
 
-    client_rules: DataFrame | None = None  # CLIENT_RULE_SCHEMA
-    media_rules: DataFrame | None = None  # MEDIA_RULE_SCHEMA (inNet big table)
-    segment_rules: DataFrame | None = None  # IP_SEGMENT_SCHEMA (business)
-    auth_domains: DataFrame | None = None  # AUTH_DOMAIN_SCHEMA
-    geo: DataFrame | None = None  # GEO_SCHEMA
-    whitelist: DataFrame | None = None  # WHITELIST_SCHEMA
-    users: DataFrame | None = None  # USER_SCHEMA (ip -> userName)
-    user_info: DataFrame | None = None  # USER_INFO_SCHEMA (phone/address)
-    domain_tags: DataFrame | None = None  # DOMAIN_TAG_SCHEMA
+    client_rules: DataFrame  # CLIENT_RULE_SCHEMA
+    media_rules: DataFrame  # MEDIA_RULE_SCHEMA (inNet big table)
+    segment_rules: DataFrame  # IP_SEGMENT_SCHEMA (business)
+    auth_domains: DataFrame  # AUTH_DOMAIN_SCHEMA
+    geo: DataFrame  # GEO_SCHEMA
+    whitelist: DataFrame  # WHITELIST_SCHEMA
+    users: DataFrame  # USER_SCHEMA (ip -> userName)
+    user_info: DataFrame  # USER_INFO_SCHEMA (phone/address)
+    domain_tags: DataFrame  # DOMAIN_TAG_SCHEMA
     _rows: dict[str, list[dict]] = field(
         default_factory=dict, init=False, repr=False, compare=False
     )
@@ -65,15 +70,42 @@ class EnrichDims:
         return self._rows[name]
 
 
-def in_net_bounds(dims: EnrichDims) -> list[tuple[int, int]]:
-    """J3's [lo, hi] ranges: media and segment rules together, because
-    inNet is membership in either (DnsRptCH.scala:222-235)."""
-    return [
+_GEO_COLS = ["country", "province", "city", "operator"]
+
+
+def join_geo(df: DataFrame, dims: EnrichDims) -> DataFrame:
+    """J5: ``aipLong`` -> country/province/city/operator, "" when no range
+    matches (binary search over disjoint ranges, IpSearch.java:41-105)."""
+    return range_join(
+        df,
+        dims.geo,
+        "aipLong",
+        rule_rows=dims.rows("geo"),
+        match="first",
+        payload_cols=_GEO_COLS,
+        defaults=dict.fromkeys(_GEO_COLS, ""),
+        assume_disjoint=True,
+    )
+
+
+def join_in_net(df: DataFrame, dims: EnrichDims) -> DataFrame:
+    """J3: inNet = resolver when ``aipLong`` lies in a media or a segment
+    range, else 0 — membership OR over both tables (DnsRptCH.scala:222-235).
+    ``membership_flag`` routes the merged ranges: a literal OR up to
+    ~100 ranges, a broadcast interval join above."""
+    bounds = [
         (r["min_long_ip"], r["max_long_ip"])
         for name in ("media_rules", "segment_rules")
-        if getattr(dims, name) is not None
         for r in dims.rows(name)
     ]
+    return (
+        membership_flag(df, F.col("aipLong"), bounds, "__in_net")
+        .withColumn(
+            "inNet",
+            F.when(F.col("__in_net"), F.col("resolver")).otherwise(F.lit(0)).cast("long"),
+        )
+        .drop("__in_net")
+    )
 
 
 def enrich_base(events: DataFrame, dims: EnrichDims) -> DataFrame:
@@ -86,38 +118,16 @@ def enrich_base(events: DataFrame, dims: EnrichDims) -> DataFrame:
     df = events.withColumn("clientIpLong", ip_to_long("clientIp")).withColumn(
         "aipLong", ip_to_long("aip")
     )
-    if dims.client_rules is not None:
-        df = range_join(
-            df,
-            dims.client_rules,
-            "clientIpLong",
-            rule_rows=dims.rows("client_rules"),
-            match="first",
-            payload_cols=["client_type_id"],
-            defaults={"client_type_id": DEFAULT_CLIENT_NAME},
-        ).withColumnRenamed("client_type_id", "clientName")
-    else:
-        df = df.withColumn("clientName", F.lit(DEFAULT_CLIENT_NAME))
-    if dims.geo is not None:
-        df = range_join(
-            df,
-            dims.geo,
-            "aipLong",
-            rule_rows=dims.rows("geo"),
-            match="first",
-            payload_cols=["country", "province", "city", "operator"],
-            defaults={
-                "country": "",
-                "province": "",
-                "city": "",
-                "operator": "",
-            },
-            assume_disjoint=True,
-        )
-    else:
-        for c in ("country", "province", "city", "operator"):
-            df = df.withColumn(c, F.lit(""))
-    return df
+    df = range_join(
+        df,
+        dims.client_rules,
+        "clientIpLong",
+        rule_rows=dims.rows("client_rules"),
+        match="first",
+        payload_cols=["client_type_id"],
+        defaults={"client_type_id": DEFAULT_CLIENT_NAME},
+    ).withColumnRenamed("client_type_id", "clientName")
+    return join_geo(df, dims)
 
 
 def _dedup_auth_last(auth: DataFrame) -> DataFrame:
@@ -133,54 +143,23 @@ def _dedup_auth_last(auth: DataFrame) -> DataFrame:
     )
 
 
-def enrich_top(top: DataFrame, dims: EnrichDims) -> DataFrame:
+def enrich_top(flow: DataFrame, dims: EnrichDims) -> DataFrame:
     """The reference's Tuple2Es enrichment pass over the top-K flow rows
     (DnsRptCH.scala:207-294), as one withColumns chain + broadcast joins.
+    ``flow`` is ``reports.flow_report``'s output, which carries aipLong.
 
     Adds: authorityDomain, replaceDomain, inNet, company metadata
     (companyName/soft/websiteName/websiteType), geo fields on aip,
     abroadNum/telecomNum/linkNum/gatNum, aIpAddr.
     """
-    df = top.withColumn("authorityDomain", authority_domain("domain")).withColumn(
+    df = flow.withColumn("authorityDomain", authority_domain("domain")).withColumn(
         "replaceDomain", strip_scheme("domain")
     )
-    if "aipLong" not in df.columns:
-        df = df.withColumn("aipLong", ip_to_long("aip"))
-
-    # J3 inNet: membership OR over media + segment ranges -> inNet =
-    # resolver when inside, else 0 (DnsRptCH.scala:222-235)
-    bounds = in_net_bounds(dims)
-    if bounds:
-        # size-routed: literal OR below ~100 merged ranges, broadcast
-        # interval join above (see membership_flag docstring)
-        df = membership_flag(df, F.col("aipLong"), bounds, "__in_net")
-    else:
-        df = df.withColumn("__in_net", F.lit(False))
-    df = df.withColumn(
-        "inNet",
-        F.when(F.col("__in_net"), F.col("resolver")).otherwise(F.lit(0)).cast("long"),
-    ).drop("__in_net")
-
+    df = join_in_net(df, dims)
     # J4 company metadata (last match wins, resolved dim-side)
-    if dims.auth_domains is not None:
-        auth = _dedup_auth_last(dims.auth_domains)
-        df = df.join(F.broadcast(auth), "authorityDomain", "left")
-    else:
-        for c in ("companyName", "soft", "websiteName", "websiteType"):
-            df = df.withColumn(c, F.lit(None).cast("string"))
-
+    df = df.join(F.broadcast(_dedup_auth_last(dims.auth_domains)), "authorityDomain", "left")
     # J5 geo on aip (again, over top rows — reference :260-284)
-    if dims.geo is not None and "country" not in top.columns:
-        df = range_join(
-            df,
-            dims.geo,
-            "aipLong",
-            rule_rows=dims.rows("geo"),
-            match="first",
-            payload_cols=["country", "province", "city", "operator"],
-            defaults={"country": "", "province": "", "city": "", "operator": ""},
-            assume_disjoint=True,
-        )
+    df = join_geo(df, dims)
 
     # conditional counters (DnsRptCH.scala:263-280): resolver attributed
     # to abroad / telecom / link / gat buckets by geo fields
@@ -225,17 +204,8 @@ def enrich_business(top: DataFrame, dims: EnrichDims) -> DataFrame:
     """J2: aip -> business resource (name/type/props), last-match wins
     (DnsRptCH.scala:95-101, 590-596). Used by the flow report A10 and
     business rollup A16."""
-    if dims.segment_rules is None:
-        return (
-            top.withColumn("resource_name", F.lit(None).cast("string"))
-            .withColumn("resource_type", F.lit(None).cast("string"))
-            .withColumn("resource_props", F.lit(None).cast("string"))
-        )
-    df = top
-    if "aipLong" not in df.columns:
-        df = df.withColumn("aipLong", ip_to_long("aip"))
     return range_join(
-        df,
+        top.withColumn("aipLong", ip_to_long("aip")),
         dims.segment_rules,
         "aipLong",
         rule_rows=dims.rows("segment_rules"),
@@ -245,12 +215,8 @@ def enrich_business(top: DataFrame, dims: EnrichDims) -> DataFrame:
     )
 
 
-def join_users(df: DataFrame, dims: EnrichDims, drop_unmatched: bool = True) -> DataFrame:
+def join_users(df: DataFrame, dims: EnrichDims) -> DataFrame:
     """J6: clientIp -> userName broadcast equi-join (DnsRptCH.scala:375-376);
     the reference drops rows with no user."""
-    if dims.users is None:
-        return df.withColumn("userName", F.lit(None).cast("string"))
     out = df.join(F.broadcast(dims.users), "clientIp", "left")
-    if drop_unmatched:
-        out = out.filter(F.col("userName").isNotNull() & (F.col("userName") != ""))
-    return out
+    return out.filter(F.col("userName").isNotNull() & (F.col("userName") != ""))

@@ -25,10 +25,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dnsflow_clickhouse_spark.functions.domains import authority_domain
+from dnsflow_clickhouse_spark.functions.net import ip_to_long
 from dnsflow_clickhouse_spark.operators.enrich import (
     EnrichDims,
     enrich_business,
-    in_net_bounds,
+    join_in_net,
     join_users,
 )
 from dnsflow_clickhouse_spark.operators.topk import global_topk, grouped_topk
@@ -159,16 +160,11 @@ def flow_report(
     agg = base.groupBy("clientName", "domain", "dnsIp", "aip").agg(
         F.sum("resolver").alias("resolver"), F.sum("error").alias("error")
     )
-    if dims.whitelist is not None:
-        wl = dims.whitelist.select(
-            F.col("domain"), F.lit(True).alias("__wl")
-        )
-        agg = agg.join(F.broadcast(wl), "domain", "left").withColumn(
-            "resolver",
-            F.when(F.col("__wl"), F.col("resolver") + 10).otherwise(F.col("resolver")),
-        )
-    else:
-        agg = agg.withColumn("__wl", F.lit(None).cast("boolean"))
+    wl = dims.whitelist.select(F.col("domain"), F.lit(True).alias("__wl"))
+    agg = agg.join(F.broadcast(wl), "domain", "left").withColumn(
+        "resolver",
+        F.when(F.col("__wl"), F.col("resolver") + 10).otherwise(F.col("resolver")),
+    )
     top = global_topk(
         agg.filter(F.col("resolver") >= having_min),
         [F.desc("resolver"), F.asc("domain"), F.asc("dnsIp"), F.asc("aip"), F.asc("clientName")],
@@ -178,52 +174,6 @@ def flow_report(
         F.when(F.col("__wl"), F.col("resolver") - 10).otherwise(F.col("resolver")),
     ).drop("__wl")
     return enrich_business(top, dims)
-
-
-# --- A11: top-N authority-domain slice (DnsRptCH.scala:63-105) ---
-
-# default membership list mirrors the reference's hardcoded top-20
-# suffix set (DnsRptCH.scala:64-85) in spirit; callers pass their own
-TOP_AUTHORITY_SUFFIXES = [
-    "qq.com",
-    "baidu.com",
-    "taobao.com",
-    "jd.com",
-    "163.com",
-    "sina.com.cn",
-    "weibo.com",
-    "sohu.com",
-    "aliyun.com",
-    "bilibili.com",
-]
-
-
-def top_authority_slice(
-    base: DataFrame,
-    dims: EnrichDims,
-    suffixes: list[str] | None = None,
-    having_min: int = 100,
-) -> DataFrame:
-    """A11 (reference Top20AuthorityDomain, DnsRptCH.scala:63-105): keep
-    only events whose domain contains one of the tracked authority
-    suffixes (P5, :64-85), aggregate the 4-dim key, HAVING > 100 (P4,
-    :88), enrich with business resources (J2, :95-101).
-
-    The membership filter is a single rlike over an alternation — one
-    regex evaluated JVM-side inside codegen, no join, no shuffle beyond
-    the aggregation's own exchange. At 100 TB the predicate sits
-    directly above the scan, so column pruning + predicate evaluation
-    happen before the (drastically smaller) shuffle.
-    """
-    pats = suffixes if suffixes is not None else TOP_AUTHORITY_SUFFIXES
-    rx = "(" + "|".join(p.replace(".", "\\.") for p in pats) + ")"
-    sliced = base.filter(F.col("domain").rlike(rx))
-    agg = (
-        sliced.groupBy("clientName", "domain", "dnsIp", "aip")
-        .agg(F.sum("resolver").alias("resolver"), F.sum("error").alias("error"))
-        .filter(F.col("resolver") > having_min)
-    )
-    return enrich_business(agg, dims)
 
 
 # --- A13: trend rollup over the enriched top frame (DnsRptCH.scala:46-57) ---
@@ -294,30 +244,13 @@ def user_report(
     top1 = global_topk(
         agg, [F.desc("resolver"), F.asc("clientIp"), F.asc("domain"), F.asc("aip")], k1
     )
-    named = join_users(top1, dims, drop_unmatched=True)
     top2 = global_topk(
-        named, [F.desc("error"), F.asc("clientIp"), F.asc("domain"), F.asc("aip")], k2
+        join_users(top1, dims),
+        [F.desc("error"), F.asc("clientIp"), F.asc("domain"), F.asc("aip")],
+        k2,
     )
-    from dnsflow_clickhouse_spark.functions.net import ip_to_long
-    from dnsflow_clickhouse_spark.operators.range_join import in_any_range
-
-    bounds = in_net_bounds(dims)
-    top2 = top2.withColumn("aipLong", ip_to_long("aip")).withColumn(
-        "inNet",
-        F.when(
-            in_any_range(F.col("aipLong"), bounds) if bounds else F.lit(False),
-            F.col("resolver"),
-        )
-        .otherwise(F.lit(0))
-        .cast("long"),
-    ).drop("aipLong")
-    if dims.user_info is not None:
-        top2 = top2.join(F.broadcast(dims.user_info), "userName", "left")
-    else:
-        top2 = top2.withColumn("phone", F.lit(None).cast("string")).withColumn(
-            "address", F.lit(None).cast("string")
-        )
-    return top2
+    top2 = join_in_net(top2.withColumn("aipLong", ip_to_long("aip")), dims).drop("aipLong")
+    return top2.join(F.broadcast(dims.user_info), "userName", "left")
 
 
 # --- A15: per-user middle data (DnsRptCH.scala:110-140) ---
@@ -325,7 +258,7 @@ def user_report(
 
 def user_middle_data(base: DataFrame, dims: EnrichDims) -> DataFrame:
     agg = base.groupBy("clientIp", "domain").agg(F.sum("resolver").alias("cnt"))
-    return join_users(agg, dims, drop_unmatched=True).select("userName", "domain", "cnt")
+    return join_users(agg, dims).select("userName", "domain", "cnt")
 
 
 # --- A20-A22: daily user rollups (UserRpt.scala:109-191) ---
@@ -349,10 +282,6 @@ def user_tags(middle: DataFrame, dims: EnrichDims) -> DataFrame:
     """distinct (user, domain) -> tag join -> drop all-unknown -> distinct
     flattened tag array per user (UserRpt.scala:141-191)."""
     pairs = middle.select("userName", "domain").dropDuplicates()
-    if dims.domain_tags is None:
-        return pairs.groupBy("userName").agg(
-            F.array().cast("array<string>").alias("tags")
-        )
     tagged = pairs.join(F.broadcast(dims.domain_tags), "domain", "left").select(
         "userName",
         F.array(

@@ -167,18 +167,6 @@ def write_window(
             df.unpersist(blocking=True)
 
 
-def run_batch_from_lines(
-    lines: DataFrame,
-    dims: EnrichDims,
-    app_time_s: int | None = None,
-    deterministic: bool = False,
-) -> dict[str, DataFrame]:
-    """JSON-lines variant: parse then process (reference S3 + call())."""
-    return process_batch(
-        parse_raw_lines(lines), dims, app_time_s, deterministic=deterministic
-    )
-
-
 def run_backfill(
     spark: SparkSession,
     events: DataFrame,

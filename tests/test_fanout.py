@@ -1,13 +1,16 @@
 """The fused report fan-out: every report ``process_batch`` derives from
 its shared aggregates equals a plain per-report groupBy written here,
-the roll-ups share one cached aggregate with one exchange, and a window
-written through the pipeline releases everything it persisted."""
+the roll-ups share one cached aggregate with one exchange, a window
+written through the pipeline releases everything it persisted, and a
+missing dim table behaves as an empty one."""
 
 from __future__ import annotations
 
 import json
+import shutil
 from collections import Counter
 
+import pytest
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -15,7 +18,11 @@ from dnsflow_clickhouse_spark import app
 from dnsflow_clickhouse_spark import schemas as S
 from dnsflow_clickhouse_spark.functions.domains import authority_domain
 from dnsflow_clickhouse_spark.operators import reports as R
-from dnsflow_clickhouse_spark.operators.enrich import enrich_base, enrich_top
+from dnsflow_clickhouse_spark.operators.enrich import (
+    DEFAULT_CLIENT_NAME,
+    enrich_base,
+    enrich_top,
+)
 from dnsflow_clickhouse_spark.sources.events import derive_events, parse_raw_lines
 from dnsflow_clickhouse_spark.sources.synth import (
     SYNTH_APP_TIME,
@@ -250,17 +257,27 @@ def test_windows_release_what_they_persist(spark, tmp_path):
     assert qps == seen[("dns_flow_qps", FX.APP_TIME)]
 
 
-def test_load_dims_reads_declared_schemas_without_jobs(spark, tmp_path):
-    _write_dims(spark, tmp_path)
+def _load_dims_without_jobs(spark, dims_dir: str | None):
     sc = spark.sparkContext
     group = "load-dims-probe"
     sc.setJobGroup(group, "load_dims must run no Spark job")
     try:
-        dims = app.load_dims(spark, str(tmp_path))
+        dims = app.load_dims(spark, dims_dir)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], dims_dir
+    return dims
+
+
+def test_load_dims_reads_declared_schemas_without_jobs(spark, tmp_path):
+    """A full dims dir, one with tables missing, and no dims dir: no job
+    runs, every field has its declared schema, and an absent table is an
+    empty frame."""
+    full, partial = tmp_path / "full", tmp_path / "partial"
+    _write_dims(spark, full)
+    missing = {"geo", "users", "domain_tags"}
+    shutil.copytree(full, partial, ignore=lambda d, names: [f"{f}.parquet" for f in missing])
     declared = {
         "client_rules": S.CLIENT_RULE_SCHEMA,
         "media_rules": S.MEDIA_RULE_SCHEMA,
@@ -272,8 +289,121 @@ def test_load_dims_reads_declared_schemas_without_jobs(spark, tmp_path):
         "user_info": S.USER_INFO_SCHEMA,
         "domain_tags": S.DOMAIN_TAG_SCHEMA,
     }
-    for f, schema in declared.items():
-        assert getattr(dims, f).schema == schema, f
+    for dims_dir, absent in ((str(full), set()), (str(partial), missing), (None, set(declared))):
+        dims = _load_dims_without_jobs(spark, dims_dir)
+        for f, schema in declared.items():
+            df = getattr(dims, f)
+            assert df.schema == schema, (dims_dir, f)
+            assert df.isEmpty() == (f in absent), (dims_dir, f)
+
+
+# Extra in-window events: client-1 queries above user_report's HAVING
+# (> 50 per clientIp/domain/aip), from a known user and from a client
+# IP with no user, so the per-user reports have rows to check.
+_USER_LINES = [
+    json.dumps(dict(
+        Timestamp=FX.APP_TIME + 30, ServerIP="223.5.5.1", ClientIP=ip,
+        Domain="www.qq.com", Type="A", ResponseCode=0, QR=True,
+        Answers=[{"Type": "A", "Value": "172.0.0.60"}],
+    ))
+    for ip in ("10.0.0.1", "10.0.0.3")
+    for _ in range(60)
+]
+
+# absent dim table -> (report, column, the values that column may hold:
+# its documented default; an empty set means the report has no rows)
+_DEFAULTS = {
+    "client_rules": ("dns_flow_qps", "clientName", {R.ALL_CLIENTS, DEFAULT_CLIENT_NAME}),
+    "segment_rules": ("dns_flow_clear", "resource_name", {None}),
+    "auth_domains": ("dns_flow_clear", "companyName", {None}),
+    "geo": ("dns_flow_clear", "aIpAddr", {""}),
+    "users": ("dns_middle_user", "userName", set()),
+    "user_info": ("bigdata_dns_flow_top_user", "phone", {None}),
+}
+
+
+def _run_app(spark, monkeypatch, args: list[str], out) -> dict[str, tuple[list, list]]:
+    """``app.main(args + --out out)``; returns each report's (columns,
+    rows as stored), read back with the schema of the frame the sink was
+    given, because an empty report stores no file to infer one from."""
+    schemas = {}
+    write = app.write_report_idempotent
+
+    def recording(df, base_dir, table, batch_id):
+        schemas[table] = df.schema
+        write(df, base_dir, table, batch_id)
+
+    monkeypatch.setattr(app, "write_report_idempotent", recording)
+    app.main([*args, "--out", str(out)])
+    monkeypatch.undo()
+    return {
+        name: (schema.names, spark.read.schema(schema).parquet(str(out / name)).collect())
+        for name, schema in schemas.items()
+    }
+
+
+def _batch(spark, monkeypatch, inp, dims_dir, out) -> dict[str, tuple[list, list]]:
+    dims = [] if dims_dir is None else ["--dims", str(dims_dir)]
+    return _run_app(spark, monkeypatch, [
+        "batch", "--input", str(inp), *dims,
+        "--app-time", str(FX.APP_TIME), "--deterministic",
+    ], out)
+
+
+@pytest.fixture(scope="module")
+def batch_inputs(spark, tmp_path_factory):
+    """(input dir, full dims dir, out dir of the full-dims batch, that
+    batch's stored reports)."""
+    root = tmp_path_factory.mktemp("missing_dims")
+    inp = root / "in"
+    inp.mkdir()
+    (inp / "events.txt").write_text("\n".join(FX.raw_lines() + _USER_LINES), encoding="utf-8")
+    dims_dir, out = root / "dims", root / "out"
+    _write_dims(spark, dims_dir)
+    with pytest.MonkeyPatch.context() as mp:
+        full = _batch(spark, mp, inp, dims_dir, out)
+    return inp, dims_dir, out, full
+
+
+@pytest.mark.parametrize("absent", [*app._DIM_FIELDS, None], ids=lambda a: a or "no_dims")
+def test_missing_dim_is_an_empty_dim(spark, monkeypatch, tmp_path, batch_inputs, absent):
+    """A batch with one dim table absent (or no --dims at all) writes all
+    18 reports with the full-dims column order, its documented defaults,
+    and no row without a user in the per-user reports."""
+    inp, full_dims, _, full = batch_inputs
+    dims_dir = None
+    if absent is not None:
+        dims_dir = tmp_path / "dims"
+        shutil.copytree(full_dims, dims_dir, ignore=lambda d, names: [f"{absent}.parquet"])
+    got = _batch(spark, monkeypatch, inp, dims_dir, tmp_path / "out")
+    assert got.keys() == full.keys() and len(got) == 18
+    for name, (columns, _) in got.items():
+        assert columns == full[name][0], name
+    for name in ("dns_middle_user", "bigdata_dns_flow_top_user"):
+        assert full[name][1] and all(r["userName"] is not None for r in got[name][1]), name
+    for table, (report, col, allowed) in _DEFAULTS.items():
+        if absent in (table, None):
+            values = {r[col] for r in got[report][1]}
+            assert values <= allowed, (table, values)
+            assert {r[col] for r in full[report][1]} - allowed, table
+            # with no dims at all the users are absent too, so the
+            # per-user reports may be empty
+            assert values or not allowed or absent is None, table
+
+
+def test_daily_without_domain_tags_writes_no_user_tags(spark, monkeypatch, tmp_path, batch_inputs):
+    """Untagged domains tag as unknown and all-unknown users are dropped,
+    so with no domain_tags table the daily job writes no user tags."""
+    _, full_dims, middle, _ = batch_inputs
+    no_tags = tmp_path / "dims"
+    shutil.copytree(full_dims, no_tags, ignore=lambda d, names: ["domain_tags.parquet"])
+
+    def daily(dims_dir, out):
+        args = ["daily", "--input", str(middle), "--dims", str(dims_dir), "--day", "2023-11-14"]
+        return _run_app(spark, monkeypatch, args, out)["bigdata_user_tags"][1]
+
+    assert daily(full_dims, tmp_path / "full")
+    assert daily(no_tags, tmp_path / "no_tags") == []
 
 
 def test_each_rule_table_collected_once_per_window(spark):

@@ -4,13 +4,16 @@ the full fan-out smoke."""
 
 from __future__ import annotations
 
+import dataclasses
 from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from dnsflow_clickhouse_spark import schemas as S
 from dnsflow_clickhouse_spark.operators import reports as R
 from dnsflow_clickhouse_spark.operators.enrich import enrich_base, enrich_top
+from dnsflow_clickhouse_spark.operators.range_join import MEMBERSHIP_LITERAL_MAX
 from dnsflow_clickhouse_spark.sources.events import derive_events, parse_raw_lines
 from dnsflow_clickhouse_spark.streaming.pipeline import process_batch
 
@@ -126,28 +129,6 @@ def test_enrich_top_fields(spark, base_df):
     assert qq and all(r["companyName"] == "腾讯" for r in qq)
 
 
-def test_top_authority_slice(spark, base_df):
-    """A11: only domains matching the tracked suffix set survive, the
-    HAVING threshold applies, and groups match a python recount."""
-    dims = FX.build_dims(spark)
-    out = R.top_authority_slice(
-        base_df, dims, suffixes=["baidu.com", "qq.com"], having_min=5
-    ).collect()
-    assert out, "authority slice empty"
-    exp = Counter(
-        (e["clientName"], e["domain"], e["dnsIp"], e["aip"])
-        for e in FX.py_base_events()
-        if "baidu.com" in e["domain"] or "qq.com" in e["domain"]
-    )
-    exp = {k: n for k, n in exp.items() if n > 5}
-    got = {
-        (r["clientName"], r["domain"], r["dnsIp"], r["aip"]): r["resolver"]
-        for r in out
-    }
-    assert got == exp
-    assert all("taobao" not in r["domain"] for r in out)
-
-
 def test_user_report_shape(spark, base_df):
     dims = FX.build_dims(spark)
     out = R.user_report(base_df, dims, having_min=0).collect()
@@ -155,6 +136,29 @@ def test_user_report_shape(spark, base_df):
     assert all(r["clientName"] == 1 for r in out)
     assert all(r["userName"] in ("alice", "bob") for r in out)
     assert all(r["phone"] is not None for r in out)
+
+
+def test_user_report_in_net_matches_clear_on_join_path(spark, base_df):
+    """J3 with more disjoint media ranges than ``membership_flag`` inlines
+    takes its broadcast-join path in both reports, and the user report's
+    inNet agrees with dns_flow_clear's for every aip the two share."""
+    spread = [((100 << 24) + 4 * i, (100 << 24) + 4 * i + 1) for i in range(150)]
+    one = (1 << 24) + 9  # 1.0.0.9; 172.0.0.60 is in a segment rule
+    media = spark.createDataFrame([(one, one), *spread], S.MEDIA_RULE_SCHEMA)
+    assert len(spread) + 1 > MEMBERSHIP_LITERAL_MAX
+    dims = dataclasses.replace(FX.build_dims(spark), media_rules=media)
+    users = R.user_report(base_df, dims, having_min=0)
+    clear = enrich_top(R.flow_report(base_df, dims, having_min=1), dims)
+    for df in (users, clear):
+        assert "__mlo" in df._jdf.queryExecution().optimizedPlan().toString()
+
+    def in_net(df):
+        return {(r["aip"], r["inNet"] > 0) for r in df.select("aip", "inNet").collect()}
+
+    got, exp = in_net(users), in_net(clear)
+    assert len(exp) == len({aip for aip, _ in exp})  # one flag per aip
+    assert got <= exp
+    assert {flag for _, flag in got} == {True, False}
 
 
 def test_full_fanout_smoke(spark):

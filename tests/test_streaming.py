@@ -11,10 +11,10 @@ from pathlib import Path
 
 from tests.fixtures_dns import APP_TIME, WINDOW, build_dims, raw_lines
 
+from dnsflow_clickhouse_spark.sources.events import parse_raw_lines
 from dnsflow_clickhouse_spark.streaming.pipeline import (
     process_batch,
     run_backfill,
-    run_batch_from_lines,
     start_stream,
 )
 
@@ -53,7 +53,7 @@ def test_stream_matches_batch(spark, tmp_path):
     assert set(got["__times"]) == {APP_TIME}
 
     lines_df = spark.createDataFrame([(l,) for l in raw_lines()], "value string")
-    expected = run_batch_from_lines(lines_df, dims, APP_TIME, deterministic=True)
+    expected = process_batch(parse_raw_lines(lines_df), dims, APP_TIME, deterministic=True)
     for name in ("dns_flow_qps", "dns_flow_response_code", "dns_flow_trend"):
         assert got[name] == _rows(expected[name]), f"stream != batch for {name}"
 
@@ -96,8 +96,6 @@ def test_stream_late_file_triggers_same_window(spark, tmp_path):
 def test_backfill_replays_windows(spark):
     dims = build_dims(spark)
     lines_df = spark.createDataFrame([(l,) for l in raw_lines()], "value string")
-    from dnsflow_clickhouse_spark.sources.events import parse_raw_lines
-
     events = parse_raw_lines(lines_df)
 
     seen: dict[tuple[str, int], int] = {}

@@ -23,8 +23,9 @@ way a production backfill over a 100 TB store would:
   precisely what the reference's plain JDBC append gets wrong
   (SURVEY §3).
 
-    python tools/backfill_run.py [sf_dir] [n_windows] [out.json]
-    (defaults: /root/testdata/sf0.1, 6, BACKFILL_r09.json)
+    python tools/backfill_run.py sf_dir n_windows out.json
+    (all three are required, so no run overwrites a committed artifact
+    by default; the committed drills used the sf0.1 testdata and 6)
 """
 
 from __future__ import annotations
@@ -95,9 +96,9 @@ def _run_window(spark, store: str, reports_dir: Path, dims, t: int) -> tuple[flo
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    n_windows = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    out_path = Path(sys.argv[3] if len(sys.argv) > 3 else "BACKFILL_r09.json")
+    if len(sys.argv) != 4:
+        raise SystemExit("usage: python tools/backfill_run.py sf_dir n_windows out.json")
+    sf_dir, n_windows, out_path = sys.argv[1], int(sys.argv[2]), Path(sys.argv[3])
     work = Path("/tmp/backfill_run")
     shutil.rmtree(work, ignore_errors=True)
     store = str(work / "events_store")
