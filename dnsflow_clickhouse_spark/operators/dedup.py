@@ -365,15 +365,6 @@ def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
     )
 
 
-def char_shingles(text: Column, k: int = 8) -> Column:
-    """Distinct k-character shingles as an array column (in-row)."""
-    n = F.length(text)
-    idx = F.sequence(F.lit(1), F.greatest(n - k + 1, F.lit(1)))
-    return F.when(n == 0, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(F.transform(idx, lambda i: text.substr(i, F.lit(k))))
-    )
-
-
 def token_ngrams(text: Column, n: int = 3) -> Column:
     """Distinct n-grams of whitespace tokens (in-row, no explode).
 

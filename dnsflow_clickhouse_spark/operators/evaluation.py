@@ -315,9 +315,10 @@ def psi_from_cells(
     """PSI from pre-aggregated histogram cells ``(grp, b, c_ref,
     c_cur)`` — the math half of :func:`psi_report`, public so streaming
     folds can reuse it: a micro-batch pipeline keeps additive (grp, b,
-    cnt) histogram state (streaming/pipeline.py: merge_hist_state) and
-    joins it against a fixed reference histogram each batch; drift is
-    then one call on bucket-count-sized frames, no history rescans."""
+    cnt) histogram state (folded with io.merge_additive) and joins it
+    against a fixed reference histogram each batch
+    (streaming/pipeline.py: streaming_psi); drift is then one call on
+    bucket-count-sized frames, no history rescans."""
     B = n_buckets
     totals = cells.groupBy("grp").agg(
         F.sum("c_ref").alias("n_ref"), F.sum("c_cur").alias("n_cur")

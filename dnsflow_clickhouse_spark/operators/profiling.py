@@ -279,6 +279,43 @@ def cusum_changepoints(
     )
 
 
+def cusum_over_mean(
+    counts: DataFrame,
+    series_col: str,
+    order_col: str,
+    k_num: int,
+    k_den: int,
+    h_mult: int,
+) -> DataFrame:
+    """:func:`cusum_changepoints` over a (series, order, cnt) count
+    frame with thresholds scaled from each series' own mean: drift
+    allowance k = mean * k_num/k_den, alarm threshold h = mean * h_mult,
+    the mean in exact micros (decimal-widened sum * 1e6 div count). The
+    per-series means are one small aggregate broadcast back onto the
+    counts.
+
+    Shared by the batch query (queries/catalog_profiling.event_rate_cusum)
+    and a streaming fold that keeps the counts additively across
+    micro-batches (io.merge_additive on series and order): the scorer is
+    a pure function of the folded counts, so batch and streaming agree
+    once the same events have arrived — a late hour re-enters the prefix
+    at its event-time position, and the means are recomputed from the
+    folded state on every call."""
+    means = counts.groupBy(series_col).agg(
+        F.expr("CAST(sum(cnt) AS DECIMAL(38,0)) * 1000000 div count(*)")
+        .cast("long")
+        .alias("mean_micro")
+    )
+    return cusum_changepoints(
+        counts.join(F.broadcast(means), series_col),
+        series_col,
+        order_col,
+        F.col("cnt"),
+        F.expr(f"mean_micro * {k_num} div {k_den}"),
+        F.expr(f"mean_micro * {h_mult}"),
+    )
+
+
 def k_anonymity_report(
     df: DataFrame,
     quasi_cols: list[str],
@@ -676,8 +713,8 @@ def ewma_smooth(
 def ewma_from_counts(counts: DataFrame, window_buckets: int = 8) -> DataFrame:
     """The EWMA scorer over a (k, b, cnt) bucket-count frame — split out
     of :func:`ewma_smooth` so the STREAMING path can fold bucket counts
-    additively across micro-batches (streaming/pipeline.py:
-    merge_bucket_counts) and score the folded state with the identical
+    additively across micro-batches (io.merge_additive on keys k, b)
+    and score the folded state with the identical
     arithmetic: counts are additive, the contribution expansion is
     linear in the counts, so batch ≡ streaming once the same events
     have arrived (parity test in tests/test_streaming.py)."""

@@ -311,8 +311,9 @@ def seasonal_hour_anomalies(
     window over 24 hour-of-day partitions of day-count length.
 
     Shared by the batch query (queries/catalog_dns5.qps_anomaly_report)
-    and the streaming fold (streaming/pipeline.streaming_qps_anomaly) —
-    the batch ≡ streaming parity contract of the pipeline module.
+    and a streaming fold that keeps the hour counts with
+    io.merge_additive on keys day, hod — the batch ≡ streaming parity
+    contract of the pipeline module.
     """
     from pyspark.sql import Window
 

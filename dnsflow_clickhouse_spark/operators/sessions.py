@@ -15,7 +15,7 @@ them.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -114,16 +114,6 @@ def asof_join(
         *[F.col("__last_rv").getField(c).alias(f"asof_{c}") for c in value_cols],
     )
     return out
-
-
-def session_boundary_flag(
-    ts: Column, prev_ts: Column, gap_seconds: int
-) -> Column:
-    """Column-level boundary predicate for composition/tests."""
-    return prev_ts.isNull() | (
-        (F.unix_micros(ts) - F.unix_micros(prev_ts))
-        > F.lit(int(gap_seconds) * 1_000_000)
-    )
 
 
 def transition_matrix(

@@ -19,6 +19,13 @@ sketch is one cheap union+re-aggregate, with no re-scan of history
 (ClickHouse ships the same idea as the AggregateFunction(uniq, ...)
 state columns the reference's tables could use; SURVEY §2.5).
 
+Streaming folds merge each micro-batch's sketch into the running state,
+the first batch being the state. The max (HLL), bit_or (Bloom) and
+keep-k (KMV) merges are replay-idempotent: a re-delivered batch changes
+nothing. Summed counters (Count-Min, quantile buckets) re-add, so a
+pipeline that retries pairs them with the batch-id-keyed sink
+(io.write_report_idempotent).
+
 HLL shape (m = 64 registers, 6-bit bucket / 24-bit rank field carved
 from the ~30-bit polynomial hash):
 

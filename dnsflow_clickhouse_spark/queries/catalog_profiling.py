@@ -376,12 +376,10 @@ def event_rate_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     hours where the cumulative positive drift above 1.5x the series
     mean exceeds 8x the mean. The sequential recurrence runs as two
     cumulative window aggregates via the prefix-scan identity
-    (operators/profiling.py: cusum_changepoints) — one shuffle, no
+    (operators/profiling.py: cusum_over_mean) — one shuffle, no
     iteration, value-hash oracle. Output: one row per (event_type,
     hour) with the exact cusum trajectory and the alarm flag."""
-    from dnsflow_clickhouse_spark.operators.profiling import (
-        cusum_changepoints,
-    )
+    from dnsflow_clickhouse_spark.operators.profiling import cusum_over_mean
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
@@ -392,19 +390,13 @@ def event_rate_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = ev.groupBy("event_type", "hour_ep").agg(
         F.count(F.lit(1)).alias("cnt")
     )
-    means = counts.groupBy("event_type").agg(
-        F.expr("CAST(sum(cnt) AS DECIMAL(38,0)) * 1000000 div count(*)")
-        .cast("long")
-        .alias("mean_micro")
-    )
-    joined = counts.join(F.broadcast(means), "event_type")
-    return cusum_changepoints(
-        joined,
+    return cusum_over_mean(
+        counts,
         "event_type",
         "hour_ep",
-        F.col("cnt"),
-        F.expr(f"mean_micro * {_CUSUM_K_NUM} div {_CUSUM_K_DEN}"),
-        F.expr(f"mean_micro * {_CUSUM_H_MULT}"),
+        _CUSUM_K_NUM,
+        _CUSUM_K_DEN,
+        _CUSUM_H_MULT,
     ).orderBy("event_type", "hour_ep")
 
 

@@ -28,13 +28,6 @@ def dim_from_rows(spark: SparkSession, rows: Iterable[tuple], schema: T.StructTy
     return spark.createDataFrame(list(rows), schema=schema)
 
 
-def read_parquet_dim(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
 def read_jdbc(
     spark: SparkSession,
     url: str,

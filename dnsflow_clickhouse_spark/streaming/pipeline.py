@@ -355,120 +355,6 @@ def start_stream(
     )
 
 
-def merge_bloom_state(state: DataFrame | None, batch_bloom: DataFrame) -> DataFrame:
-    """Cross-batch membership state as a Bloom bitmap
-    (operators.sketches.bloom_build): or-fold one micro-batch's filter
-    into the running state. Same contract as the HLL/CMS folds — the
-    state is <= bits/32 rows FOREVER, the merge is idempotent (replayed
-    batches cannot flip a bit twice), and the same bitmap gates the next
-    batch's admission (seen-before suppression without an ever-growing
-    exact key set; false positives drop a few novel items, never
-    re-admit seen ones)."""
-    from dnsflow_clickhouse_spark.operators.sketches import bloom_merge
-
-    return batch_bloom if state is None else bloom_merge(state, batch_bloom)
-
-
-def merge_sketch_state(
-    state: DataFrame | None, batch_regs: DataFrame, key_cols: list[str]
-) -> DataFrame:
-    """Cross-batch distinct-count state as mergeable HLL registers
-    (operators.sketches): fold one micro-batch's register table into the
-    running state with union + max.
-
-    This is the streaming shape the sketch family exists for — the state
-    is <= m rows per key FOREVER (vs an ever-growing exact distinct
-    set), the merge is idempotent (a replayed batch cannot inflate the
-    estimate, so retries are safe), and the same state table is what an
-    incremental daily rollup stores between runs."""
-    from dnsflow_clickhouse_spark.operators.sketches import hll_merge
-
-    both = batch_regs if state is None else state.unionByName(batch_regs)
-    return hll_merge(both, key_cols)
-
-
-def merge_cms_state(state: DataFrame | None, batch_sketch: DataFrame) -> DataFrame:
-    """Cross-batch frequency state as Count-Min counters: counters are
-    additive, so the fold is union + sum per (row, bucket). Unlike the
-    HLL fold this one is NOT replay-idempotent (a re-delivered batch
-    adds its counts again) — pair it with the idempotent batch-id sink
-    (io.write_report_idempotent) or exactly-once foreachBatch
-    bookkeeping when retries are possible. State stays depth x width
-    rows forever."""
-    from pyspark.sql import functions as F
-
-    if state is None:
-        return batch_sketch
-    return (
-        state.unionByName(batch_sketch)
-        .groupBy("row", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
-def merge_qh_state(
-    state: DataFrame | None, batch_state: DataFrame, key_cols: list[str]
-) -> DataFrame:
-    """Cross-batch quantile state as mergeable HDR-histogram buckets
-    (operators.sketches.qh_sketch): counts are additive, so the fold is
-    union + sum per (key, bucket). State stays (keys x occupied buckets)
-    rows forever — bucket count grows with log(max_value), not volume —
-    and qh_quantiles answers p50/p99 from the folded state at any point
-    without rescanning history. Like the CMS fold this is NOT
-    replay-idempotent (counts re-add); pair with the idempotent batch-id
-    sink when retries are possible."""
-    from dnsflow_clickhouse_spark.operators.sketches import qh_merge
-
-    both = batch_state if state is None else state.unionByName(batch_state)
-    return qh_merge(both, key_cols)
-
-
-def merge_kmv_state(
-    state: DataFrame | None,
-    batch_state: DataFrame,
-    key_cols: list[str],
-    k: int = 256,
-) -> DataFrame:
-    """Cross-batch distinct-SET state as a KMV/theta sketch
-    (operators.sketches.kmv_sketch): fold one micro-batch's k-minimum
-    hash table into the running state with union + distinct + keep-k.
-    Like the HLL fold this is replay-IDEMPOTENT (a re-delivered batch
-    re-inserts hashes that dedupe away, so retries are safe) and the
-    state stays <= k rows per key forever — but unlike HLL the folded
-    state also answers SET questions (kmv_set_estimates): the running
-    "corpus so far" sketch can be intersected against a benchmark
-    sketch every batch for streaming contamination tracking."""
-    from dnsflow_clickhouse_spark.operators.sketches import kmv_merge
-
-    if state is None:
-        return batch_state
-    return kmv_merge(state, batch_state, key_cols, k)
-
-
-def merge_hist_state(
-    state: DataFrame | None, batch_cells: DataFrame, key_cols: list[str]
-) -> DataFrame:
-    """Cross-batch histogram state for streaming drift monitoring:
-    additive (``*key_cols``, ``b``, ``cnt``) bucket counts, folded with
-    union + sum. State stays (keys x buckets) rows forever. Like the
-    CMS/QH folds this is NOT replay-idempotent (counts re-add) — pair
-    with the idempotent batch-id sink when retries are possible.
-
-    The consumer is ``streaming_psi``: join the folded CURRENT histogram
-    against a fixed REFERENCE histogram (training-time distribution) and
-    score drift per batch on bucket-count-sized frames — the streaming
-    face of operators/evaluation.psi_report."""
-    from pyspark.sql import functions as F
-
-    if state is None:
-        return batch_cells
-    return (
-        state.unionByName(batch_cells)
-        .groupBy(*key_cols, "b")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 def streaming_psi(
     cur_cells: DataFrame,
     ref_cells: DataFrame,
@@ -476,12 +362,11 @@ def streaming_psi(
     n_buckets: int,
 ) -> DataFrame:
     """PSI of the folded current histogram against a fixed reference
-    histogram, per group. Inputs are (group, b, cnt) frames (the
-    merge_hist_state shape); both are bucket-count-sized, so the full
-    outer join and the PSI math are planning-cost only — no history
-    rescans, no fact-table pass."""
-    from pyspark.sql import functions as F
-
+    histogram, per group. Inputs are (group, b, cnt) frames; the current
+    one is folded across micro-batches with
+    ``io.merge_additive(state, batch, [group, "b"], ["cnt"])``. Both are
+    bucket-count-sized, so the full outer join and the PSI math are
+    planning-cost only — no history rescans, no fact-table pass."""
     from dnsflow_clickhouse_spark.operators.evaluation import psi_from_cells
 
     r = ref_cells.select(
@@ -500,127 +385,3 @@ def streaming_psi(
         )
     )
     return psi_from_cells(cells, group_col, n_buckets)
-
-
-def merge_hour_counts(state: DataFrame | None, batch_counts: DataFrame) -> DataFrame:
-    """Cross-batch (day, hod, cnt) hour-bucket state for streaming
-    anomaly detection: additive fold (union + sum), state bounded by
-    days x 24 rows. Like merge_hist_state this is NOT replay-idempotent
-    (counts re-add) — pair with the idempotent batch-id sink when
-    retries are possible."""
-    from pyspark.sql import functions as F
-
-    if state is None:
-        return batch_counts
-    return (
-        state.unionByName(batch_counts)
-        .groupBy("day", "hod")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
-def streaming_qps_anomaly(
-    counts: DataFrame,
-    min_history: int = 7,
-    threshold_ppm: int = 500_000,
-) -> DataFrame:
-    """Seasonal-naive anomaly report over the folded hour-count state —
-    the streaming face of queries/catalog_dns5.qps_anomaly_report,
-    scoring on day x 24-sized frames only (no history rescans, no
-    fact-table pass). Because the fold is additive and the scorer is a
-    pure function of the folded counts, the batch and streaming paths
-    are value-identical once the same events have arrived (parity
-    test in tests/test_streaming.py)."""
-    from dnsflow_clickhouse_spark.operators.reports import (
-        seasonal_hour_anomalies,
-    )
-
-    return seasonal_hour_anomalies(counts, min_history, threshold_ppm)
-
-
-def merge_series_hour_counts(
-    state: DataFrame | None, batch_counts: DataFrame
-) -> DataFrame:
-    """Cross-batch (series, hour_ep, cnt) state for streaming CUSUM:
-    additive fold (union + sum), state bounded by series x observed
-    hours. Same contract as merge_hour_counts: NOT replay-idempotent
-    (counts re-add on retry) — pair with the idempotent batch-id sink
-    when retries are possible. Late events for an already-folded hour
-    simply add into that hour's cell, so the rescore after the fold
-    sees the corrected series."""
-    if state is None:
-        return batch_counts
-    return (
-        state.unionByName(batch_counts)
-        .groupBy("series", "hour_ep")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
-def streaming_cusum(
-    counts: DataFrame,
-    k_num: int = 3,
-    k_den: int = 2,
-    h_mult: int = 8,
-) -> DataFrame:
-    """CUSUM drift report over the folded (series, hour_ep, cnt) state
-    — the streaming face of queries/catalog_profiling.event_rate_cusum,
-    rescoring on series x hours-sized frames only (no fact-table
-    rescans). The detector's sequential recurrence is a pure function
-    of the ordered hour counts (the prefix-scan identity in
-    operators/profiling.cusum_changepoints), and the fold is additive,
-    so batch and streaming are value-identical once the same events
-    have arrived — including late hours, which re-enter the prefix at
-    their event-time position instead of corrupting running state
-    (parity test in tests/test_streaming.py). Thresholds replay the
-    batch query's: k = mean * k_num/k_den, h = mean * h_mult, means
-    recomputed from the folded state each trigger."""
-    from dnsflow_clickhouse_spark.operators.profiling import (
-        cusum_changepoints,
-    )
-
-    means = counts.groupBy("series").agg(
-        F.expr("CAST(sum(cnt) AS DECIMAL(38,0)) * 1000000 div count(*)")
-        .cast("long")
-        .alias("mean_micro")
-    )
-    joined = counts.join(F.broadcast(means), "series")
-    return cusum_changepoints(
-        joined,
-        "series",
-        "hour_ep",
-        F.col("cnt"),
-        F.expr(f"mean_micro * {k_num} div {k_den}"),
-        F.expr(f"mean_micro * {h_mult}"),
-    )
-
-
-def merge_bucket_counts(
-    state: DataFrame | None, batch_counts: DataFrame
-) -> DataFrame:
-    """Cross-batch (k, b, cnt) time-bucket count state for streaming
-    EWMA smoothing: additive fold (union + sum), state bounded by
-    keys × live buckets (prune buckets older than the EWMA window if
-    the state must stay small). Like merge_hour_counts this is NOT
-    replay-idempotent (counts re-add) — pair with the idempotent
-    batch-id sink when retries are possible."""
-    if state is None:
-        return batch_counts
-    return (
-        state.unionByName(batch_counts)
-        .groupBy("k", "b")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
-def streaming_ewma(counts: DataFrame, window_buckets: int = 8) -> DataFrame:
-    """Gap-aware dyadic EWMA over the folded bucket-count state — the
-    streaming face of queries/catalog_traindata2.ewma_event_rates.
-    Counts are additive and the EWMA contribution expansion is linear
-    in the counts, so scoring the fold is value-identical to the batch
-    operator once the same events have arrived (parity test in
-    tests/test_streaming.py) — the same incremental-view-maintenance
-    contract as streaming_psi and streaming_qps_anomaly."""
-    from dnsflow_clickhouse_spark.operators.profiling import ewma_from_counts
-
-    return ewma_from_counts(counts, window_buckets)

@@ -90,7 +90,7 @@ def first_seen(
     )
 
 
-# --- per-key streaming admission quota (transformWithState) ----------------
+# --- per-key streaming admission quota (applyInPandasWithState) ------------
 
 QUOTA_OUTPUT = T.StructType(
     [
@@ -100,93 +100,27 @@ QUOTA_OUTPUT = T.StructType(
     ]
 )
 
-try:  # Spark >= 4.0 only; import-gated per repo policy
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    HAS_TRANSFORM_WITH_STATE = True
-except ImportError:  # pragma: no cover - present on every supported Spark
-    HAS_TRANSFORM_WITH_STATE = False
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-
-
-class _QuotaProcessor(StatefulProcessor):
-    """Per-key admission quota over the lifetime of the stream: admit a
-    key's rows (smallest id first within each batch, deterministic)
-    until ``cap`` have ever been admitted, then drop the rest forever.
-
-    The streaming face of the per-domain crawl quota: state is ONE long
-    per key (the admitted count) in a ``ValueState``, sharded by the
-    group key across executors — RocksDB-backed at real scale like
-    every transformWithState operator. Built on the Spark 4
-    ``transformWithStateInPandas`` API (the successor of
-    ``applyInPandasWithState`` used by :func:`first_seen`) so the engine
-    exercises both custom-state surfaces.
-    """
-
-    def __init__(self, cap: int) -> None:
-        self.cap = cap
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self.admitted = handle.getValueState("admitted", "n BIGINT")
-
-    def handleInputRows(self, key, rows, timerValues):
-        prev = self.admitted.get()
-        n = int(prev[0]) if prev else 0
-        room = self.cap - n
-        if room <= 0:
-            # quota already exhausted; nothing to emit, state unchanged
-            return
-        batch = pd.concat(list(rows), ignore_index=True)
-        sel = batch.sort_values("id").head(room)
-        if len(sel):
-            self.admitted.update((n + len(sel),))
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]] * len(sel),
-                    "id": sel["id"].to_list(),
-                    "admit_rank": list(range(n + 1, n + len(sel) + 1)),
-                }
-            )
-
-    def close(self) -> None:
-        pass
-
-
 _QUOTA_STATE = T.StructType([T.StructField("n", T.LongType())])
 
 
-def quota_admit(keyed: DataFrame, cap: int, backend: str = "groupstate") -> DataFrame:
-    """Streaming per-key admission quota.
+def quota_admit(keyed: DataFrame, cap: int) -> DataFrame:
+    """Streaming per-key admission quota: admit a key's rows (smallest
+    id first within each batch, deterministic) until ``cap`` have ever
+    been admitted, then drop the rest forever.
 
     Input columns: ``key string, id long``. Output: QUOTA_OUTPUT with
-    ``admit_rank`` = 1-based lifetime admission index per key; rows past
-    the key's lifetime ``cap`` are dropped forever.
-
-    ``backend="groupstate"`` (default) uses ``applyInPandasWithState`` —
-    runs everywhere this repo runs. ``backend="tws"`` uses the Spark 4
-    ``transformWithStateInPandas`` processor (:class:`_QuotaProcessor`);
-    its state server speaks protobuf, so it needs a working
-    ``google.protobuf`` on the workers (absent in this sandbox — the
-    class itself is exercised only for its pure-pandas logic in tests).
+    ``admit_rank`` = 1-based lifetime admission index per key. State is
+    ONE long per key (the admitted count), kept by
+    ``applyInPandasWithState`` and sharded by the group key across
+    executors — RocksDB state store territory at real scale, like
+    :func:`first_seen`.
     """
-    if backend == "tws":
-        if not HAS_TRANSFORM_WITH_STATE:  # pragma: no cover
-            raise RuntimeError("transformWithStateInPandas requires Spark >= 4.0")
-        return keyed.groupBy("key").transformWithStateInPandas(
-            _QuotaProcessor(cap), QUOTA_OUTPUT, "append", "none"
-        )
 
     def fn(
         key: tuple[Any, ...],
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
         n = state.get[0] if state.exists else 0
         room = cap - n
         if room <= 0:
@@ -205,102 +139,4 @@ def quota_admit(keyed: DataFrame, cap: int, backend: str = "groupstate") -> Data
 
     return keyed.groupBy("key").applyInPandasWithState(
         fn, QUOTA_OUTPUT, _QUOTA_STATE, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-# --- gap-based streaming sessionizer (applyInPandasWithState) --------------
-
-SESSION_OUTPUT = T.StructType(
-    [
-        T.StructField("key", T.StringType()),
-        T.StructField("session_start", T.LongType()),
-        T.StructField("session_end", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-    ]
-)
-
-_SESSION_STATE = T.StructType(
-    [
-        T.StructField("start", T.LongType()),
-        T.StructField("last", T.LongType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
-
-
-def sessionize_stream(
-    keyed: DataFrame,
-    gap_seconds: int,
-    idle_timeout_minutes: int = 1,
-) -> DataFrame:
-    """Custom stateful gap sessionizer: closes a session when the gap
-    between consecutive event times exceeds ``gap_seconds``, emitting
-    ``(key, session_start, session_end, n_events)`` per CLOSED session
-    — the explicit-state twin of the native ``session_window`` path in
-    streaming/pipeline.py, for payloads the built-in can't carry (the
-    state here is three longs, but any session accumulator slots into
-    the state schema).
-
-    Input columns: ``key string, ts long`` (epoch seconds). Sessions
-    also close via processing-time timeout (``idle_timeout_minutes``)
-    when a key goes quiet, so the final session is not held forever.
-    State per key is O(1); the shuffle is the groupBy on the key —
-    exactly the distribution the 100 TB run needs (RocksDB state store
-    for large key spaces, same note as :func:`first_seen`).
-    """
-
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            if state.exists:
-                s, last, n = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    {
-                        "key": [key[0]],
-                        "session_start": [s],
-                        "session_end": [last],
-                        "n_events": [n],
-                    }
-                )
-            return
-        ts = sorted(
-            int(t) for pdf in pdfs if len(pdf) for t in pdf["ts"].tolist()
-        )
-        if not ts:
-            return
-        if state.exists:
-            s, last, n = state.get
-        else:
-            s = last = n = None  # loop opens the first session
-        closed = []
-        for t in ts:
-            if s is None:
-                s, last, n = t, t, 1
-            elif t - last > gap_seconds:
-                closed.append((s, last, n))
-                s, last, n = t, t, 1
-            else:
-                last, n = t, n + 1
-        state.update((s, last, n))
-        state.setTimeoutDuration(idle_timeout_minutes * 60 * 1000)
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "key": [key[0]] * len(closed),
-                    "session_start": [c[0] for c in closed],
-                    "session_end": [c[1] for c in closed],
-                    "n_events": [c[2] for c in closed],
-                }
-            )
-
-    return keyed.groupBy("key").applyInPandasWithState(
-        fn,
-        SESSION_OUTPUT,
-        _SESSION_STATE,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout,
     )

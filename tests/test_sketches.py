@@ -86,8 +86,6 @@ def test_cms_weighted_counts(spark):
 
 
 def test_streaming_sketch_state_matches_one_shot_and_is_replay_safe(spark):
-    from dnsflow_clickhouse_spark.streaming.pipeline import merge_sketch_state
-
     df = _items(spark, n=900, dups=2).withColumn(
         "batch", F.abs(F.hash("item")) % 4
     )
@@ -95,29 +93,31 @@ def test_streaming_sketch_state_matches_one_shot_and_is_replay_safe(spark):
     state = None
     batches = [df.filter(F.col("batch") == b) for b in range(4)]
     for b in batches:
-        state = merge_sketch_state(
-            state, hll_registers(b, ["grp"], "item"), ["grp"]
-        )
+        regs = hll_registers(b, ["grp"], "item")
+        state = regs if state is None else hll_merge(state.unionByName(regs), ["grp"])
     folded = hll_estimate(state, ["grp"]).collect()
     one_shot = hll_estimate(hll_registers(df, ["grp"], "item"), ["grp"]).collect()
     assert sorted(folded) == sorted(one_shot)
     # retry safety: re-delivering an already-merged batch changes nothing
-    replayed = merge_sketch_state(
-        state, hll_registers(batches[2], ["grp"], "item"), ["grp"]
+    replayed = hll_merge(
+        state.unionByName(hll_registers(batches[2], ["grp"], "item")), ["grp"]
     )
     assert sorted(hll_estimate(replayed, ["grp"]).collect()) == sorted(folded)
 
 
 def test_streaming_cms_state_fold_matches_one_shot(spark):
-    from dnsflow_clickhouse_spark.streaming.pipeline import merge_cms_state
+    from dnsflow_clickhouse_spark.io import merge_additive
 
     df = _items(spark, n=200, dups=3).withColumn(
         "batch", F.abs(F.hash("item")) % 3
     )
     state = None
     for b in range(3):
-        state = merge_cms_state(
-            state, cms_sketch(df.filter(F.col("batch") == b), "item")
+        batch = cms_sketch(df.filter(F.col("batch") == b), "item")
+        state = (
+            batch
+            if state is None
+            else merge_additive(state, batch, ["row", "bucket"], ["cnt"])
         )
     one_shot = cms_sketch(df, "item")
     folded = {(r.row, r.bucket): r.cnt for r in state.collect()}
@@ -157,19 +157,17 @@ def test_bloom_no_false_negatives_and_merge(spark):
 
 
 def test_streaming_bloom_state_fold_matches_one_shot(spark):
-    from dnsflow_clickhouse_spark.operators.sketches import bloom_build
-    from dnsflow_clickhouse_spark.streaming.pipeline import merge_bloom_state
+    from dnsflow_clickhouse_spark.operators.sketches import bloom_build, bloom_merge
 
     df = _items(spark, n=120, dups=1).withColumn(
         "batch", F.abs(F.hash("item")) % 3
     )
     state = None
     for b in range(3):
-        state = merge_bloom_state(
-            state, bloom_build(df.filter(F.col("batch") == b), "item")
-        )
+        batch = bloom_build(df.filter(F.col("batch") == b), "item")
+        state = batch if state is None else bloom_merge(state, batch)
     # replay a batch: idempotent
-    state = merge_bloom_state(state, bloom_build(df.filter(F.col("batch") == 1), "item"))
+    state = bloom_merge(state, bloom_build(df.filter(F.col("batch") == 1), "item"))
     folded = {r.word_idx: r.word for r in state.collect()}
     whole = {r.word_idx: r.word for r in bloom_build(df, "item").collect()}
     assert folded == whole
@@ -229,17 +227,15 @@ def test_qh_merge_is_lossless_and_quantiles_within_bound(spark):
 
 
 def test_streaming_qh_state_fold_matches_one_shot(spark):
-    from dnsflow_clickhouse_spark.operators.sketches import qh_sketch
-    from dnsflow_clickhouse_spark.streaming.pipeline import merge_qh_state
+    from dnsflow_clickhouse_spark.operators.sketches import qh_merge, qh_sketch
 
     d = spark.createDataFrame(
         [("k", i) for i in range(1, 301)], "k string, v long"
     ).withColumn("batch", F.col("v") % 3)
     state = None
     for b in range(3):
-        state = merge_qh_state(
-            state, qh_sketch(d.filter(F.col("batch") == b), ["k"], "v"), ["k"]
-        )
+        batch = qh_sketch(d.filter(F.col("batch") == b), ["k"], "v")
+        state = batch if state is None else qh_merge(state.unionByName(batch), ["k"])
     folded = sorted(map(tuple, state.collect()))
     whole = sorted(map(tuple, qh_sketch(d, ["k"], "v").collect()))
     assert folded == whole
@@ -333,8 +329,7 @@ def test_kmv_set_estimates_track_exact_overlap(spark):
 
 
 def test_streaming_kmv_state_fold_matches_one_shot_and_replay(spark):
-    from dnsflow_clickhouse_spark.operators.sketches import kmv_sketch
-    from dnsflow_clickhouse_spark.streaming.pipeline import merge_kmv_state
+    from dnsflow_clickhouse_spark.operators.sketches import kmv_merge, kmv_sketch
 
     d = spark.createDataFrame(
         [("k", f"item-{i}") for i in range(900)], "k string, item string"
@@ -344,12 +339,12 @@ def test_streaming_kmv_state_fold_matches_one_shot_and_replay(spark):
         batch = kmv_sketch(
             d.filter(F.col("batch") == b), ["k"], "item"
         )
-        state = merge_kmv_state(state, batch, ["k"])
+        state = batch if state is None else kmv_merge(state, batch, ["k"])
     folded = sorted(map(tuple, state.collect()))
     whole = sorted(map(tuple, kmv_sketch(d, ["k"], "item").collect()))
     assert folded == whole
     # replay-idempotent: re-folding batch 0 changes nothing
-    replay = merge_kmv_state(
+    replay = kmv_merge(
         state, kmv_sketch(d.filter(F.col("batch") == 0), ["k"], "item"), ["k"]
     )
     assert sorted(map(tuple, replay.collect())) == folded

@@ -151,119 +151,6 @@ def test_quota_admit_across_batches(spark, tmp_path):
         q.stop()
 
 
-def test_quota_processor_tws_pure_logic():
-    """The transformWithState variant can't run in this sandbox (its
-    state server needs google.protobuf), so pin its per-batch logic
-    directly: same admission semantics as the GroupState backend."""
-    import pandas as pd
-
-    from dnsflow_clickhouse_spark.streaming.stateful import _QuotaProcessor
-
-    class FakeValueState:
-        def __init__(self):
-            self.v = None
-
-        def get(self):
-            return self.v
-
-        def update(self, t):
-            self.v = t
-
-    p = _QuotaProcessor(3)
-    p.admitted = FakeValueState()
-    out1 = list(
-        p.handleInputRows(("a",), iter([pd.DataFrame({"id": [30, 10, 20, 40]})]), None)
-    )
-    assert len(out1) == 1
-    assert out1[0]["id"].to_list() == [10, 20, 30]
-    assert out1[0]["admit_rank"].to_list() == [1, 2, 3]
-    # second batch: budget exhausted -> nothing
-    out2 = list(p.handleInputRows(("a",), iter([pd.DataFrame({"id": [5]})]), None))
-    assert out2 == []
-
-
-def test_sessionize_stream_closes_on_gap_and_timeout(spark, tmp_path):
-    """Two micro-batches: batch 1 opens sessions; batch 2's events past
-    the gap close them and open new ones; the idle timeout flushes the
-    final open sessions.
-
-    HAZARD (round-3 postmortem): ``processAllAvailable()`` must never be
-    called while a ProcessingTimeTimeout is armed — the engine schedules
-    continuous empty micro-batches to evaluate timeouts, and the call can
-    then spin forever (observed: 5,400+ empty batches, 55-minute wedge).
-    This test therefore only POLLS with wall-clock deadlines: sink
-    contents for emitted sessions, and a rotation-proof cumulative input
-    counter (batchId -> numInputRows) for "batch N was ingested".  The
-    timeout flush needs no pokes either — the engine's own empty batches
-    evaluate it."""
-    import time
-
-    from dnsflow_clickhouse_spark.streaming.stateful import sessionize_stream
-
-    inp = tmp_path / "sess_in"
-    inp.mkdir()
-    out: list = []
-
-    def sink(df, _bid):
-        out.extend(df.collect())
-
-    def wait_for(pred, deadline_s, poll_s=0.2):
-        end = time.time() + deadline_s
-        while time.time() < end:
-            if pred():
-                return True
-            time.sleep(poll_s)
-        return pred()
-
-    # u1: events 100,105 then (batch 2) 300 -> gap 60 closes [100,105]
-    # u2: single event 50, nothing later -> closed only by idle timeout
-    (inp / "b1.txt").write_text("u1,100\nu1,105\nu2,50\n", encoding="utf-8")
-    raw = spark.readStream.format("text").load(str(inp))
-    keyed = raw.selectExpr(
-        "split(value, ',')[0] AS key", "CAST(split(value, ',')[1] AS LONG) AS ts"
-    )
-    sessions = sessionize_stream(keyed, gap_seconds=60, idle_timeout_minutes=1)
-    q = (
-        sessions.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
-        .start()
-    )
-
-    seen_batches: dict = {}
-
-    def rows_ingested():
-        # recentProgress rotates (ring buffer); accumulate per batchId so
-        # a flood of empty batches can't hide the data batch.
-        for p in q.recentProgress:
-            seen_batches[p["batchId"]] = p["numInputRows"]
-        return sum(seen_batches.values())
-
-    try:
-        assert wait_for(lambda: rows_ingested() >= 3, 60), "batch 1 not ingested"
-        assert out == []  # nothing closed yet
-        (inp / "b2.txt").write_text("u1,300\n", encoding="utf-8")
-        assert wait_for(
-            lambda: any(
-                r.key == "u1" and r.session_start == 100 and r.session_end == 105
-                for r in out
-            ),
-            60,
-        ), f"gap-close session never emitted; sink={out}"
-        closed = {(r.key, r.session_start, r.session_end, r.n_events) for r in out}
-        assert ("u1", 100, 105, 2) in closed  # gap-closed
-        # idle timeout: the engine's empty-batch timeout evaluation
-        # flushes the final open sessions (u2's only session, u1's
-        # re-opened one) after idle_timeout_minutes of quiet.
-        assert wait_for(lambda: len(out) >= 3, 180, poll_s=1.0), (
-            f"timeout flush incomplete; sink={out}"
-        )
-        closed = {(r.key, r.session_start, r.session_end, r.n_events) for r in out}
-        assert ("u2", 50, 50, 1) in closed  # timeout-closed
-        assert ("u1", 300, 300, 1) in closed
-    finally:
-        q.stop()
-
-
 def test_incremental_scrub_matches_full_corpus(spark):
     """Incremental span scrubbing parity: fold fingerprint-ownership
     state batch by batch (ids arriving in order) and scrub each batch

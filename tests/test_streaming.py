@@ -353,9 +353,9 @@ def test_stream_folds_hll_sketch_state_across_microbatches(spark, tmp_path):
 
     from dnsflow_clickhouse_spark.operators.sketches import (
         hll_estimate,
+        hll_merge,
         hll_registers,
     )
-    from dnsflow_clickhouse_spark.streaming.pipeline import merge_sketch_state
 
     inp = tmp_path / "sketch_in"
     inp.mkdir()
@@ -374,7 +374,9 @@ def test_stream_folds_hll_sketch_state_across_microbatches(spark, tmp_path):
             state = spark.read.parquet(state_dir)
         except Exception:
             state = None
-        merged = merge_sketch_state(state, regs, ["grp"])
+        merged = (
+            regs if state is None else hll_merge(state.unionByName(regs), ["grp"])
+        )
         # overwrite-on-read state table: <= 64 rows per key forever
         merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
             state_dir
@@ -423,10 +425,10 @@ def test_stream_folds_quantile_sketch_state_across_microbatches(spark, tmp_path)
     from pyspark.sql import functions as F
 
     from dnsflow_clickhouse_spark.operators.sketches import (
+        qh_merge,
         qh_quantiles,
         qh_sketch,
     )
-    from dnsflow_clickhouse_spark.streaming.pipeline import merge_qh_state
 
     inp = tmp_path / "qh_in"
     inp.mkdir()
@@ -445,7 +447,7 @@ def test_stream_folds_quantile_sketch_state_across_microbatches(spark, tmp_path)
             prev = spark.read.parquet(state_dir)
         except Exception:
             prev = None
-        merged = merge_qh_state(prev, st, ["grp"])
+        merged = st if prev is None else qh_merge(prev.unionByName(st), ["grp"])
         merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
             state_dir
         )
@@ -491,11 +493,9 @@ def test_streaming_psi_fold_matches_batch(spark):
     one-shot frame (batch ≡ streaming parity, the repo's §2.10 rule)."""
     from pyspark.sql import functions as F
 
+    from dnsflow_clickhouse_spark.io import merge_additive
     from dnsflow_clickhouse_spark.operators.evaluation import psi_report
-    from dnsflow_clickhouse_spark.streaming.pipeline import (
-        merge_hist_state,
-        streaming_psi,
-    )
+    from dnsflow_clickhouse_spark.streaming.pipeline import streaming_psi
 
     def cells(rows):
         return spark.createDataFrame(rows, "g string, b long, cnt long")
@@ -503,8 +503,7 @@ def test_streaming_psi_fold_matches_batch(spark):
     ref = cells([("x", 0, 8), ("x", 1, 2), ("y", 0, 5)])
     b1 = cells([("x", 0, 1), ("x", 1, 3)])
     b2 = cells([("x", 1, 4), ("y", 1, 6)])
-    state = merge_hist_state(None, b1, ["g"])
-    state = merge_hist_state(state, b2, ["g"])
+    state = merge_additive(b1, b2, ["g", "b"], ["cnt"])
     got = {
         r.g: r for r in streaming_psi(state, ref, "g", 2).collect()
     }
@@ -537,10 +536,8 @@ def test_streaming_anomaly_matches_batch(spark):
         anomalies_from_epochs,
         bucket_hour_counts,
     )
-    from dnsflow_clickhouse_spark.streaming.pipeline import (
-        merge_hour_counts,
-        streaming_qps_anomaly,
-    )
+    from dnsflow_clickhouse_spark.io import merge_additive
+    from dnsflow_clickhouse_spark.operators.reports import seasonal_hour_anomalies
     from pyspark.sql import functions as F
 
     rows = []
@@ -553,8 +550,13 @@ def test_streaming_anomaly_matches_batch(spark):
     state = None
     for k in range(3):  # deterministic 3-way split, batches overlap days
         part = ev.filter(F.col("ep") % 3 == k)
-        state = merge_hour_counts(state, bucket_hour_counts(part))
-    stream = streaming_qps_anomaly(state).collect()
+        counts = bucket_hour_counts(part)
+        state = (
+            counts
+            if state is None
+            else merge_additive(state, counts, ["day", "hod"], ["cnt"])
+        )
+    stream = seasonal_hour_anomalies(state).collect()
     assert stream == batch
     assert len(batch) == 1 and batch[0]["cnt"] == 22
 
@@ -566,12 +568,10 @@ def test_streaming_cusum_matches_batch(spark):
     which re-enters the prefix at its event-time position."""
     from pyspark.sql import functions as F
 
+    from dnsflow_clickhouse_spark.io import merge_additive
     from dnsflow_clickhouse_spark.operators.profiling import (
         cusum_changepoints,
-    )
-    from dnsflow_clickhouse_spark.streaming.pipeline import (
-        merge_series_hour_counts,
-        streaming_cusum,
+        cusum_over_mean,
     )
 
     # one series, 12 hours, a sustained burst in hours 8-11; h_mult=2
@@ -606,9 +606,15 @@ def test_streaming_cusum_matches_batch(spark):
     state = None
     for b in (b1, b2, b3):
         part = spark.createDataFrame(b, "series string, hour_ep long, cnt long")
-        state = merge_series_hour_counts(state, part)
+        state = (
+            part
+            if state is None
+            else merge_additive(state, part, ["series", "hour_ep"], ["cnt"])
+        )
     stream = (
-        streaming_cusum(state, h_mult=2).orderBy("series", "hour_ep").collect()
+        cusum_over_mean(state, "series", "hour_ep", 3, 2, 2)
+        .orderBy("series", "hour_ep")
+        .collect()
     )
     assert stream == batch
     assert any(r.alarm == 1 for r in batch)  # the burst is detected
@@ -677,10 +683,10 @@ def test_streaming_ewma_fold_matches_batch(spark):
 
     from pyspark.sql import functions as F
 
-    from dnsflow_clickhouse_spark.operators.profiling import ewma_smooth
-    from dnsflow_clickhouse_spark.streaming.pipeline import (
-        merge_bucket_counts,
-        streaming_ewma,
+    from dnsflow_clickhouse_spark.io import merge_additive
+    from dnsflow_clickhouse_spark.operators.profiling import (
+        ewma_from_counts,
+        ewma_smooth,
     )
 
     events = (
@@ -701,12 +707,12 @@ def test_streaming_ewma_fold_matches_batch(spark):
 
     # the same events split across three micro-batches (one bucket
     # split ACROSS batches to exercise the additive fold)
-    state = merge_bucket_counts(None, batch_counts(events[:2]))
-    state = merge_bucket_counts(state, batch_counts(events[2:6]))
-    state = merge_bucket_counts(state, batch_counts(events[6:]))
+    state = batch_counts(events[:2])
+    for rows in (events[2:6], events[6:]):
+        state = merge_additive(state, batch_counts(rows), ["k", "b"], ["cnt"])
 
     got = sorted(
-        map(tuple, streaming_ewma(state, 8).collect())
+        map(tuple, ewma_from_counts(state, 8).collect())
     )
     want = sorted(
         map(tuple, ewma_smooth(df, "k", "ts", 3600, window_buckets=8).collect())

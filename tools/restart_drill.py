@@ -41,8 +41,9 @@ order-independent content hash (bit_xor of xxhash64 over all columns +
 row count) EQUAL between drill and control, and exactly one
 ``batch_id`` partition per batch in the report tables.
 
-    python tools/restart_drill.py [sf_dir] [out.json]
-    (defaults: /root/testdata/sf0.01, RESTART_DRILL_r09.json)
+    python tools/restart_drill.py sf_dir out.json
+    (both are required, so no run overwrites a committed artifact by
+    default; the committed drills used the sf0.01 testdata)
 """
 
 from __future__ import annotations
@@ -106,9 +107,11 @@ def run_life(root: Path, sf_dir: str, crash_after: int | None) -> None:
     one process lifetime."""
     from pyspark.sql import functions as F
 
-    from dnsflow_clickhouse_spark.io import write_report_idempotent
+    from dnsflow_clickhouse_spark.io import merge_additive, write_report_idempotent
     from dnsflow_clickhouse_spark.operators.sketches import (
         bloom_build,
+        bloom_merge,
+        hll_merge,
         hll_registers,
     )
     from dnsflow_clickhouse_spark.session import get_spark
@@ -119,9 +122,6 @@ def run_life(root: Path, sf_dir: str, crash_after: int | None) -> None:
     )
     from dnsflow_clickhouse_spark.streaming.pipeline import (
         WINDOW_SECONDS,
-        merge_bloom_state,
-        merge_series_hour_counts,
-        merge_sketch_state,
         process_batch,
     )
 
@@ -144,13 +144,15 @@ def run_life(root: Path, sf_dir: str, crash_after: int | None) -> None:
         out = process_batch(raw, dims, app_k, deterministic=True)
 
         # fold the three state families from committed state + batch
-        state["bloom"] = merge_bloom_state(
-            state["bloom"], bloom_build(raw, "Domain")
+        bloom = bloom_build(raw, "Domain")
+        state["bloom"] = (
+            bloom if state["bloom"] is None else bloom_merge(state["bloom"], bloom)
         )
-        state["hll"] = merge_sketch_state(
-            state["hll"],
-            hll_registers(raw, ["ServerIP"], "ClientIP"),
-            ["ServerIP"],
+        regs = hll_registers(raw, ["ServerIP"], "ClientIP")
+        state["hll"] = (
+            regs
+            if state["hll"] is None
+            else hll_merge(state["hll"].unionByName(regs), ["ServerIP"])
         )
         batch_hours = (
             raw.select(
@@ -162,7 +164,13 @@ def run_life(root: Path, sf_dir: str, crash_after: int | None) -> None:
             .groupBy("series", "hour_ep")
             .agg(F.count("*").alias("cnt"))
         )
-        state["hours"] = merge_series_hour_counts(state["hours"], batch_hours)
+        state["hours"] = (
+            batch_hours
+            if state["hours"] is None
+            else merge_additive(
+                state["hours"], batch_hours, ["series", "hour_ep"], ["cnt"]
+            )
+        )
 
         # persist: versioned state writes + idempotent report writes...
         for name in STATE_FAMILIES:
@@ -392,8 +400,9 @@ def _content_hash(spark, path: str, drop: list[str] | None = None):
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out_path = Path(sys.argv[2] if len(sys.argv) > 2 else "RESTART_DRILL_r09.json")
+    if len(sys.argv) != 3:
+        raise SystemExit("usage: python tools/restart_drill.py sf_dir out.json")
+    sf_dir, out_path = sys.argv[1], Path(sys.argv[2])
     work = Path("/tmp/restart_drill")
     shutil.rmtree(work, ignore_errors=True)
     control_root, drill_root = work / "control", work / "drill"

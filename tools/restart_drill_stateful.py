@@ -44,8 +44,9 @@ Asserted (``stateful`` section, merged into the round artifact):
   error otherwise (the observable-output equality above is the
   behavioral state check either way).
 
-    python tools/restart_drill_stateful.py [merge_into.json]
-    (default merge target: RESTART_DRILL_r10.json)
+    python tools/restart_drill_stateful.py merge_into.json
+    (required, so no run rewrites a committed artifact by default; the
+    section is merged into the file if it exists, else written fresh)
 """
 
 from __future__ import annotations
@@ -194,7 +195,9 @@ def _state_hash(spark, ckpt: Path) -> dict | str:
 
 
 def main() -> None:
-    merge_into = Path(sys.argv[1] if len(sys.argv) > 1 else "RESTART_DRILL_r10.json")
+    if len(sys.argv) != 2:
+        raise SystemExit("usage: python tools/restart_drill_stateful.py merge_into.json")
+    merge_into = Path(sys.argv[1])
     shutil.rmtree(WORK, ignore_errors=True)
     make_input(WORK / "input")
     control_root, drill_root = WORK / "control", WORK / "drill"

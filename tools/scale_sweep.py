@@ -2,9 +2,10 @@
 and once at a 16x replicated corpus, and write the wall-ratio table the
 judge reads as measured (not argued) scaling evidence.
 
-    python tools/scale_sweep.py [base_dir] [x16_dir] [out.json] [query ...]
+    python tools/scale_sweep.py base_dir x16_dir out.json [query ...]
 
-The 16x corpus (default /tmp/scale16, built once per machine by
+The first three are required, so no run overwrites a committed artifact
+by default. The 16x corpus (built once per machine by
 tools/make_scale16.py) keeps dims at 1x per TPC-H semantics and
 replicates every fact table 16x with key-shifted copies (per-copy join
 structure = 1x), documents as a light-dup rewrite, embeddings as keyed
@@ -41,9 +42,11 @@ def _run(spark, sf_dir: str, fn) -> float:
 
 def main() -> None:
     args = sys.argv[1:]
-    base = args[0] if len(args) > 0 else "/root/testdata/sf0.1"
-    x16 = args[1] if len(args) > 1 else "/tmp/scale16"
-    out = Path(args[2] if len(args) > 2 else "SCALE_SWEEP_r06.json")
+    if len(args) < 3:
+        raise SystemExit(
+            "usage: python tools/scale_sweep.py base_dir x16_dir out.json [query ...]"
+        )
+    base, x16, out = args[0], args[1], Path(args[2])
     only = set(args[3:])
 
     spark = get_spark(app_name="scale-sweep")

@@ -8,13 +8,13 @@ runs, folding the three cross-batch state families through
 write/read-back state tables exactly like a deployed foreachBatch
 would:
 
-- Bloom first-seen membership over domains (``merge_bloom_state``) —
-  bitmap rows must stay CONSTANT (bits/32) forever;
-- HLL distinct-clients-per-server registers (``merge_sketch_state``) —
+- Bloom first-seen membership over domains (``sketches.bloom_merge``)
+  — bitmap rows must stay CONSTANT (bits/32) forever;
+- HLL distinct-clients-per-server registers (``sketches.hll_merge``) —
   <= keys x m rows forever;
-- per-series hour counts + CUSUM rescore (``merge_series_hour_counts``
-  + ``streaming_cusum``) — rows grow with OBSERVED HOURS (10 windows =
-  ~1h), never with event volume.
+- per-series hour counts (``io.merge_additive``) + CUSUM rescore
+  (``profiling.cusum_over_mean``) — rows grow with OBSERVED HOURS
+  (10 windows = ~1h), never with event volume.
 
 Each batch materializes all 16+2 reports (noop sink) plus the folded
 state (localCheckpoint = the write-to-store barrier), records wall and
@@ -23,9 +23,10 @@ last-3-batch mean wall within 1.5x of the first-3 mean (flat, no
 lineage/creep), bloom rows constant, HLL rows bounded, hour rows
 linear in windows.
 
-    python tools/soak_stream.py [sf_dir] [n_batches] [out.json]
+    python tools/soak_stream.py sf_dir n_batches out.json
 
-Defaults: /root/testdata/sf0.01, 10 batches, SOAK_r09.json.
+All three are required, so no run overwrites a committed artifact by
+default; the committed soaks used the sf0.01 testdata and 10 batches.
 """
 
 from __future__ import annotations
@@ -40,20 +41,21 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F
 
+from dnsflow_clickhouse_spark.io import merge_additive
+from dnsflow_clickhouse_spark.operators.profiling import cusum_over_mean
+from dnsflow_clickhouse_spark.operators.sketches import (
+    bloom_build,
+    bloom_merge,
+    hll_merge,
+    hll_registers,
+)
 from dnsflow_clickhouse_spark.session import get_spark
 from dnsflow_clickhouse_spark.sources.synth import (
     SYNTH_APP_TIME,
     demo_dims,
     synthetic_raw_events,
 )
-from dnsflow_clickhouse_spark.streaming.pipeline import (
-    WINDOW_SECONDS,
-    merge_bloom_state,
-    merge_series_hour_counts,
-    merge_sketch_state,
-    process_batch,
-    streaming_cusum,
-)
+from dnsflow_clickhouse_spark.streaming.pipeline import WINDOW_SECONDS, process_batch
 
 
 STATEFUL_WORK = Path("/tmp/soak_stateful")
@@ -153,11 +155,6 @@ def _stateful_window(spark, k: int) -> dict:
 def run_soak(spark, sf_dir: str, n_batches: int) -> dict:
     import shutil
 
-    from dnsflow_clickhouse_spark.operators.sketches import (
-        bloom_build,
-        hll_registers,
-    )
-
     shutil.rmtree(STATEFUL_WORK, ignore_errors=True)
 
     dims = demo_dims(spark)
@@ -180,13 +177,15 @@ def run_soak(spark, sf_dir: str, n_batches: int) -> dict:
             n_out += 1
         # cross-batch state folds, localCheckpoint = the state-store
         # write barrier a deployed foreachBatch would hit per trigger
-        bloom_state = merge_bloom_state(
-            bloom_state, bloom_build(raw, "Domain")
+        bloom = bloom_build(raw, "Domain")
+        bloom_state = (
+            bloom if bloom_state is None else bloom_merge(bloom_state, bloom)
         ).localCheckpoint(eager=True)
-        hll_state = merge_sketch_state(
-            hll_state,
-            hll_registers(raw, ["ServerIP"], "ClientIP"),
-            ["ServerIP"],
+        regs = hll_registers(raw, ["ServerIP"], "ClientIP")
+        hll_state = (
+            regs
+            if hll_state is None
+            else hll_merge(hll_state.unionByName(regs), ["ServerIP"])
         ).localCheckpoint(eager=True)
         batch_hours = (
             raw.select(
@@ -198,12 +197,17 @@ def run_soak(spark, sf_dir: str, n_batches: int) -> dict:
             .groupBy("series", "hour_ep")
             .agg(F.count("*").alias("cnt"))
         )
-        hour_state = merge_series_hour_counts(
-            hour_state, batch_hours
+        hour_state = (
+            batch_hours
+            if hour_state is None
+            else merge_additive(
+                hour_state, batch_hours, ["series", "hour_ep"], ["cnt"]
+            )
         ).localCheckpoint(eager=True)
-        streaming_cusum(hour_state).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        # k = 1.5x and h = 8x the series mean, as in event_rate_cusum
+        cusum_over_mean(hour_state, "series", "hour_ep", 3, 2, 8).write.format(
+            "noop"
+        ).mode("overwrite").save()
         walls.append(round(time.perf_counter() - t0, 3))
         # the state-store leg runs OUTSIDE the per-batch wall clock so
         # wall_per_batch_mean / the 1.5x flatness leak-detector keep
@@ -315,10 +319,9 @@ def run_soak(spark, sf_dir: str, n_batches: int) -> dict:
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    sf_dir = args[0] if len(args) > 0 else "/root/testdata/sf0.01"
-    n = int(args[1]) if len(args) > 1 else 10
-    out = Path(args[2] if len(args) > 2 else "SOAK_r09.json")
+    if len(sys.argv) != 4:
+        raise SystemExit("usage: python tools/soak_stream.py sf_dir n_batches out.json")
+    sf_dir, n, out = sys.argv[1], int(sys.argv[2]), Path(sys.argv[3])
     # same idle gate the bench uses (r11 verdict #3): the flatness
     # numbers are wall-clock-insensitive by design, but an artifact
     # recorded under ambient load carries a caveat it doesn't need —
