@@ -136,31 +136,32 @@ def _dns_batch(spark, sf_dir: str) -> tuple[float, dict[str, float], float]:
 
 
 def _dns_batch_concurrent(spark, sf_dir: str) -> float:
-    """The same production batch with the 18 sink jobs submitted from a
-    driver thread pool (io.write_reports_concurrent, what app.py batch
-    mode runs): overlapping the per-job driver gaps recovers most of
-    ``fanout_overhead`` — measured 14.2s -> 10.2s warm at sf0.1. Timed
-    as one number (per-report attribution is meaningless when jobs
-    interleave)."""
-    from dnsflow_clickhouse_spark.io import write_reports_concurrent
+    """The same production batch through ``write_window`` with a noop
+    sink, what app.py batch mode runs: the 18 sink jobs submitted from a
+    driver thread pool in the pipeline's report order
+    (io.write_reports_concurrent), whose overlapped per-job driver gaps
+    recover most of ``fanout_overhead`` — measured 14.2s -> 10.2s warm
+    at sf0.1. Timed as one number (per-report attribution is
+    meaningless when jobs interleave); ``write_window`` releases what
+    the window persisted."""
     from dnsflow_clickhouse_spark.sources.synth import (
         SYNTH_APP_TIME,
         demo_dims,
         synthetic_raw_events,
     )
-    from dnsflow_clickhouse_spark.streaming.pipeline import process_batch
+    from dnsflow_clickhouse_spark.streaming.pipeline import write_window
 
     raw = synthetic_raw_events(spark, sf_dir)
     dims = demo_dims(spark)
     t0 = time.perf_counter()
-    out = process_batch(raw, dims, SYNTH_APP_TIME, deterministic=True)
-    write_reports_concurrent(
-        out,
-        lambda _n, df: df.write.format("noop").mode("overwrite").save(),
+    write_window(
+        raw,
+        dims,
+        SYNTH_APP_TIME,
+        lambda _n, df, _t: df.write.format("noop").mode("overwrite").save(),
+        deterministic=True,
     )
-    wall = time.perf_counter() - t0
-    spark.catalog.clearCache()
-    return wall
+    return time.perf_counter() - t0
 
 
 def _idle_gate() -> float:

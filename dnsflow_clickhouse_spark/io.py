@@ -311,10 +311,11 @@ def write_reports_concurrent(
     reports: dict[str, DataFrame],
     write_one,
     max_threads: int = 8,
+    after: dict[str, str] | None = None,
 ) -> list[str]:
     """Submit the report fan-out's sink jobs CONCURRENTLY from a driver
-    thread pool. The 18-report fan-out is eighteen small independent
-    jobs over a few cached shared frames; submitted sequentially, the wall
+    thread pool. The 18-report fan-out is eighteen small jobs over a few
+    cached shared frames; submitted sequentially, the wall
     is sum(job + driver gap) — on a 1000-executor cluster most of the
     cluster idles while the driver plans the next tiny job (bench.py's
     ``fanout_overhead`` line is exactly this cost, ~3.5s of the batch
@@ -322,33 +323,66 @@ def write_reports_concurrent(
     from multiple driver threads natively (FAIR or FIFO — each job's
     tasks interleave either way), so a thread pool overlaps the driver
     gaps and the small stages WITHOUT changing any result: the writes
-    are independent reads of persisted frames.
+    are reads of persisted frames, ordered by the frame each report
+    reads.
+
+    ``after`` maps a report to the report whose write loads the
+    persisted frame it reads. A report whose entry names another report
+    in ``reports`` is submitted when that write ends, succeeded or
+    failed; every other report is submitted at once. A reader that ran
+    while its frame was still loading would run its own load job of
+    that frame (AQE's table-cache query stage); ordered, each frame
+    loads in one job, and the readers of different frames still run
+    side by side. Entries naming a report not in ``reports`` are
+    ignored; a cycle among the named reports raises ``ValueError``
+    before any write starts.
 
     ``write_one(name, df)`` performs one report's write (e.g. a
     ``write_report_idempotent`` closure). Exceptions propagate after
-    all submissions finish (no silent partial fan-out); returns the
-    report names in completion order (diagnostic only).
+    every write has ended (no silent partial fan-out: a failed write's
+    followers still run); returns the report names in completion order
+    (diagnostic only).
 
     Threads stay bounded (default 8): each in-flight job holds a
     result-stage buffer on the driver, and the fan-out's jobs are small
     enough that ~8 in flight saturates the gap-overlap win.
     """
-    from concurrent.futures import ThreadPoolExecutor, as_completed
+    from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+
+    waits = {
+        name: first
+        for name, first in (after or {}).items()
+        if name in reports and first in reports
+    }
+    followers: dict[str, list[str]] = {}
+    for name, first in waits.items():
+        followers.setdefault(first, []).append(name)
+    for name in waits:
+        chain = {name}
+        while name in waits:
+            name = waits[name]
+            if name in chain:
+                raise ValueError(f"report order has a cycle through {name}")
+            chain.add(name)
 
     done: list[str] = []
     errors: list[tuple[str, Exception]] = []
     with ThreadPoolExecutor(max_workers=max_threads) as pool:
-        futs = {
-            pool.submit(write_one, name, df): name
-            for name, df in reports.items()
-        }
-        for fut in as_completed(futs):
-            name = futs[fut]
-            try:
-                fut.result()
-                done.append(name)
-            except Exception as exc:  # collect all, raise after
-                errors.append((name, exc))
+
+        def submit(names):
+            return {pool.submit(write_one, n, reports[n]): n for n in names}
+
+        pending = submit(n for n in reports if n not in waits)
+        while pending:
+            finished, _ = wait(pending, return_when=FIRST_COMPLETED)
+            for fut in finished:
+                name = pending.pop(fut)
+                try:
+                    fut.result()
+                    done.append(name)
+                except Exception as exc:  # collect all, raise after
+                    errors.append((name, exc))
+                pending.update(submit(followers.get(name, ())))
     if errors:
         names = ", ".join(n for n, _ in errors)
         raise RuntimeError(

@@ -38,6 +38,9 @@ from dnsflow_clickhouse_spark.operators.range_join import (
 
 DEFAULT_CLIENT_NAME = 5
 
+# the dims ``range_join`` and ``membership_flag`` read as driver rows
+RANGE_TABLES = ("client_rules", "geo", "media_rules", "segment_rules")
+
 
 @dataclass
 class EnrichDims:
@@ -62,11 +65,26 @@ class EnrichDims:
     )
 
     def rows(self, name: str) -> list[dict]:
-        """Rows of the dim table ``name``, collected to the driver at
-        most once per instance: the range lookups of every report built
-        from these dims share one collect job per table."""
-        if name not in self._rows:
-            self._rows[name] = [r.asDict() for r in getattr(self, name).collect()]
+        """Rows of the range table ``name`` (one of ``RANGE_TABLES``),
+        collected to the driver once per instance: on first use the four
+        range tables are collected together, in one job, through a
+        tagged ``unionByName``. Each table keeps its own row order (the
+        first-match lookups resolve by input position) and only its own
+        columns."""
+        if not self._rows:
+            frames = [
+                getattr(self, t).withColumn("__table", F.lit(i))
+                for i, t in enumerate(RANGE_TABLES)
+            ]
+            tagged = frames[0]
+            for df in frames[1:]:
+                tagged = tagged.unionByName(df, allowMissingColumns=True)
+            cols = [getattr(self, t).columns for t in RANGE_TABLES]
+            rows: list[list[dict]] = [[] for _ in RANGE_TABLES]
+            for r in tagged.collect():
+                i = r["__table"]
+                rows[i].append({c: r[c] for c in cols[i]})
+            self._rows = dict(zip(RANGE_TABLES, rows))
         return self._rows[name]
 
 

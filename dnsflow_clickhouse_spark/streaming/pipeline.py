@@ -17,6 +17,11 @@ Reference behavior being re-expressed:
 - caching: the base, flow and top frames and the shared report
   aggregates persist(MEMORY_AND_DISK) around the 18-report fan-out;
   ``write_window`` unpersists them in finally (DnsRptCH.scala:1069-1160).
+  Like the reference, which runs its fan-out off the persisted RDD one
+  action at a time, each persisted frame loads in one job: a report is
+  written after the report whose write loads the frame it reads
+  (``REPORT_AFTER``), and the readers of different frames run side by
+  side.
 """
 
 from __future__ import annotations
@@ -38,6 +43,28 @@ from dnsflow_clickhouse_spark.operators.enrich import (
 from dnsflow_clickhouse_spark.sources.events import derive_events, parse_raw_lines
 
 WINDOW_SECONDS = 300
+
+# report -> the report whose write loads the persisted frame it reads
+# (``io.write_reports_concurrent``'s ``after``). dns_flow_code_domain
+# loads base and the domain top-K frame; dns_flow_qps loads the roll-up
+# aggregate, dns_flow_code_authority and dns_flow_code_client_ip their
+# top-K pair frames, and dns_flow_clear flow and top. The root is the
+# head of the longest chain (domains -> authorities -> the authority
+# split), so the window's tail is not left waiting on it.
+REPORT_AFTER: dict[str, str] = {
+    **{name: "dns_flow_qps" for name in R.ROLLUPS if name != "dns_flow_qps"},
+    "dns_flow_qps": "dns_flow_code_domain",
+    "dns_flow_code_domain_client": "dns_flow_code_domain",
+    "dns_flow_code_authority": "dns_flow_code_domain",
+    "dns_flow_code_client_ip": "dns_flow_code_domain",
+    "dns_flow_clear": "dns_flow_code_domain",
+    "bigdata_dns_flow_top_user": "dns_flow_code_domain",
+    "dns_middle_user": "dns_flow_code_domain",
+    "dns_flow_code_authority_client": "dns_flow_code_authority",
+    "dns_flow_code_client_ip_client": "dns_flow_code_client_ip",
+    "dns_flow_trend": "dns_flow_clear",
+    "dns_flow_top_business": "dns_flow_clear",
+}
 
 
 @overload
@@ -152,16 +179,20 @@ def write_window(
 ) -> None:
     """Build window ``app_time_s`` with ``process_batch`` and write its
     18 reports through ``sink(name, df, app_time_s)``, submitted
-    concurrently (``io.write_reports_concurrent``). Every frame the
-    window persisted is unpersisted in finally, also when a write fails;
-    the list is this call's own, so concurrent windows never release
-    each other's frames."""
+    concurrently and ordered by the frame each report reads
+    (``io.write_reports_concurrent`` with ``after=REPORT_AFTER``), so
+    each persisted frame loads in one job. Every frame the window
+    persisted is unpersisted in finally, also when a write fails; the
+    list is this call's own, so concurrent windows never release each
+    other's frames."""
     persisted: list[DataFrame] = []
     try:
         reports = process_batch(
             events, dims, app_time_s, deterministic=deterministic, persisted=persisted
         )
-        write_reports_concurrent(reports, lambda name, df: sink(name, df, app_time_s))
+        write_reports_concurrent(
+            reports, lambda name, df: sink(name, df, app_time_s), after=REPORT_AFTER
+        )
     finally:
         for df in persisted:
             df.unpersist(blocking=True)

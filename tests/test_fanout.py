@@ -20,6 +20,7 @@ from dnsflow_clickhouse_spark.functions.domains import authority_domain
 from dnsflow_clickhouse_spark.operators import reports as R
 from dnsflow_clickhouse_spark.operators.enrich import (
     DEFAULT_CLIENT_NAME,
+    RANGE_TABLES,
     enrich_base,
     enrich_top,
 )
@@ -29,7 +30,12 @@ from dnsflow_clickhouse_spark.sources.synth import (
     demo_dims,
     synthetic_raw_events,
 )
-from dnsflow_clickhouse_spark.streaming.pipeline import process_batch, run_backfill
+from dnsflow_clickhouse_spark.streaming.pipeline import (
+    REPORT_AFTER,
+    process_batch,
+    run_backfill,
+    write_window,
+)
 
 from tests import fixtures_dns as FX
 from tests.test_synth import SF_DIR
@@ -406,22 +412,65 @@ def test_daily_without_domain_tags_writes_no_user_tags(spark, monkeypatch, tmp_p
     assert daily(no_tags, tmp_path / "no_tags") == []
 
 
+def _next_job_id(spark) -> int:
+    """The id the next Spark job gets: the delta over a call is the
+    number of jobs it ran, including those submitted from pool threads
+    (which a job group would miss)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.dagScheduler().nextJobId()
+
+
+def _fixture_events(spark) -> DataFrame:
+    return parse_raw_lines(
+        spark.createDataFrame([(l,) for l in FX.raw_lines()], "value string")
+    )
+
+
 def test_each_rule_table_collected_once_per_window(spark):
-    """One window's plan collects each range-rule table once, however
-    many lookups and reports use it."""
+    """One window's plan collects the four range-rule tables in one job,
+    however many lookups and reports use them; a second window over the
+    same dims runs none. Each table's rows keep its own order and
+    columns."""
     dims = FX.build_dims(spark)
-    calls: Counter = Counter()
-    for table in ("client_rules", "geo", "segment_rules", "media_rules"):
-        df = getattr(dims, table)
-
-        def counted(table=table, collect=df.collect):
-            calls[table] += 1
-            return collect()
-
-        df.collect = counted
-    lines = spark.createDataFrame([(l,) for l in FX.raw_lines()], "value string")
+    events = _fixture_events(spark)
+    jobs = []
     try:
-        process_batch(parse_raw_lines(lines), dims, FX.APP_TIME, deterministic=True)
+        for _ in range(2):
+            start = _next_job_id(spark)
+            process_batch(events, dims, FX.APP_TIME, deterministic=True)
+            jobs.append(_next_job_id(spark) - start)
     finally:
         spark.catalog.clearCache()
-    assert calls == {"client_rules": 1, "geo": 1, "segment_rules": 1, "media_rules": 1}
+    assert jobs == [1, 0]
+    for table in RANGE_TABLES:
+        own = [r.asDict() for r in getattr(dims, table).collect()]
+        assert own and dims.rows(table) == own, table
+
+
+def test_window_loads_each_persisted_frame_once(spark):
+    """``write_window`` over the fixture window runs at most 45 jobs,
+    the same in consecutive windows: each persisted frame loads in one
+    job and the range tables are collected in one. A report that read a
+    frame still loading would add a load job of its own."""
+    events = _fixture_events(spark)
+
+    def noop(name, df, t):
+        df.write.format("noop").mode("overwrite").save()
+
+    jobs = []
+    for _ in range(2):
+        dims = FX.build_dims(spark)  # batch mode loads the dims per window
+        start = _next_job_id(spark)
+        write_window(events, dims, FX.APP_TIME, noop, deterministic=True)
+        jobs.append(_next_job_id(spark) - start)
+    assert jobs[0] == jobs[1] <= 45, jobs
+
+
+def test_report_order_names_only_reports(spark):
+    reports = process_batch(
+        _fixture_events(spark), FX.build_dims(spark), FX.APP_TIME, deterministic=True
+    )
+    spark.catalog.clearCache()
+    assert REPORT_AFTER.keys() <= reports.keys()
+    assert set(REPORT_AFTER.values()) <= reports.keys()

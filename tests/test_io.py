@@ -5,6 +5,7 @@ pruning (S2), report parquet sink (K1 default), middle-data text sink
 from __future__ import annotations
 
 import os
+import time
 
 from tests.fixtures_dns import APP_TIME, WINDOW, raw_lines
 
@@ -499,6 +500,68 @@ def test_write_reports_concurrent_collects_all_errors(spark, tmp_path):
 
     with pytest.raises(RuntimeError, match="boom"):
         write_reports_concurrent(reports, write_one, max_threads=2)
+
+
+def _timed_writer(fail: str | None = None, meet: set[str] = frozenset()):
+    """A fake ``write_one`` (no Spark) that records each write's
+    (start, end) clock. The writes named in ``meet`` wait for each other
+    at a barrier, which only passes if they run at the same time."""
+    import threading
+
+    spans: dict[str, tuple[float, float]] = {}
+    barrier = threading.Barrier(len(meet) or 1, timeout=10)
+
+    def write_one(name, _df):
+        start = time.monotonic()
+        try:
+            if name in meet:
+                barrier.wait()
+            time.sleep(0.05)
+            if name == fail:
+                raise ValueError(f"{name} failed")
+        finally:
+            spans[name] = (start, time.monotonic())
+
+    return write_one, spans
+
+
+def test_write_reports_concurrent_orders_followers_after_their_first():
+    from dnsflow_clickhouse_spark.io import write_reports_concurrent
+
+    reports = dict.fromkeys(["a", "b", "a1", "a2", "a11", "c"])
+    after = {"a1": "a", "a2": "a", "a11": "a1", "c": "missing"}
+    write_one, spans = _timed_writer(meet={"a", "b", "c"})
+    done = write_reports_concurrent(reports, write_one, max_threads=4, after=after)
+    assert sorted(done) == sorted(reports)
+    # a follower starts only once its first has ended
+    for name, first in (("a1", "a"), ("a2", "a"), ("a11", "a1")):
+        assert spans[name][0] >= spans[first][1], name
+    # the roots (and "c", whose first is not a report) ran side by side:
+    # each started before the others ended
+    assert max(spans[n][0] for n in "abc") < min(spans[n][1] for n in "abc")
+
+
+def test_write_reports_concurrent_runs_followers_of_a_failed_write():
+    from dnsflow_clickhouse_spark.io import write_reports_concurrent
+
+    reports = dict.fromkeys(["root", "x", "y"])
+    write_one, spans = _timed_writer(fail="root")
+    with pytest.raises(RuntimeError, match="1 report write.*root") as err:
+        write_reports_concurrent(reports, write_one, after={"x": "root", "y": "x"})
+    assert isinstance(err.value.__cause__, ValueError)
+    assert spans.keys() == {"root", "x", "y"}
+    assert spans["x"][0] >= spans["root"][1] and spans["y"][0] >= spans["x"][1]
+
+
+def test_write_reports_concurrent_rejects_a_cyclic_order():
+    from dnsflow_clickhouse_spark.io import write_reports_concurrent
+
+    write_one, spans = _timed_writer()
+    with pytest.raises(ValueError, match="cycle"):
+        write_reports_concurrent(
+            dict.fromkeys("abc"), write_one, after={"a": "b", "b": "a"}
+        )
+    assert spans == {}
 
 
 def test_distributed_manifest_build_matches_driver_build(spark, tmp_path):

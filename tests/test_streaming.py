@@ -561,6 +561,49 @@ def test_streaming_anomaly_matches_batch(spark):
     assert len(batch) == 1 and batch[0]["cnt"] == 22
 
 
+def _seasonal_oracle(counts: dict[tuple[int, int], int]) -> list[tuple]:
+    """``seasonal_hour_anomalies`` in plain Python: each (day, hod)
+    bucket against the sum of the same hour's prior days, kept with at
+    least 7 of them and an integer deviation of at least 500000 ppm."""
+    out = []
+    for (day, hod), cnt in sorted(counts.items()):
+        prior = [c for (d, h), c in counts.items() if h == hod and d < day]
+        n, s = len(prior), sum(prior)
+        if n >= 7:
+            dev = abs(cnt * n - s) * 1_000_000 // s
+            if dev >= 500_000:
+                out.append((day, hod, cnt, n, s, dev))
+    return out
+
+
+def test_seasonal_hour_anomalies_injected_spikes(spark):
+    """Spikes injected at known hours of day 7, each bucket's same-hour
+    baseline flat before it: a rise and a drop are kept, a deviation of
+    exactly 50 % is kept and one just under is dropped, and a spike with
+    6 prior days is dropped where the same hour's next spike, with 7, is
+    kept. Checked against an inline oracle of the integer arithmetic."""
+    from dnsflow_clickhouse_spark.operators.reports import seasonal_hour_anomalies
+
+    base = {3: 100, 4: 100, 5: 100, 6: 1_000_000, 7: 100}
+    counts = {(d, h): c for h, c in base.items() for d in range(9)}
+    del counts[(0, 7)]  # hod 7 starts a day late: day 7 has 6 prior days
+    counts.update({
+        (7, 3): 300,  # rise: +200 %
+        (7, 4): 10,  # drop: -90 %
+        (7, 5): 150,  # exactly +50 %
+        (7, 6): 1_499_999,  # 499999 ppm: just under 50 %
+        (7, 7): 1_000,  # 6 prior days: too little history
+        (8, 7): 1_000,  # 7 prior days (day 7's spike among them)
+    })
+    df = spark.createDataFrame(
+        [(d, h, c) for (d, h), c in counts.items()], "day int, hod int, cnt long"
+    )
+    got = [tuple(r) for r in seasonal_hour_anomalies(df).collect()]
+    assert got == _seasonal_oracle(counts)
+    dev = {(r[0], r[1]): r[5] for r in got}
+    assert dev == {(7, 3): 2_000_000, (7, 4): 900_000, (7, 5): 500_000, (8, 7): 3_375_000}
+
+
 def test_streaming_cusum_matches_batch(spark):
     """The CUSUM fold (additive (series, hour_ep) counts) rescored by
     the shared detector equals the one-shot batch result on the same
